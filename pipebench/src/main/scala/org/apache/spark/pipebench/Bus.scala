@@ -1,0 +1,11 @@
+package org.apache.spark.pipebench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus, which Spark keeps package-private. */
+object Bus {
+  /** Blocks until every posted event has reached every listener, so a
+    * listener's counters are complete when they are read.
+    */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+}
