@@ -34,6 +34,17 @@ private[functions] object BpeMergeOps {
     false
   }
 
+  /** Symbol arrays must be array<string> with non-null elements: the
+    * folds read every element as a string (the trainer's symbol arrays come
+    * from `bpe_tokens`, whose elements are never null).
+    */
+  def checkSymbols(fn: String, t: DataType): TypeCheckResult = t match {
+    case ArrayType(StringType, false) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(StringType, true) => TypeCheckResult.TypeCheckFailure(
+      s"$fn expects array<string> with non-null elements (containsNull = false)")
+    case _ => TypeCheckResult.TypeCheckFailure(s"$fn expects array<string>, got ${t.catalogString}")
+  }
+
   def toStrings(arr: ArrayData): Array[String] = {
     val n = arr.numElements()
     val out = new Array[String](n)
@@ -61,11 +72,8 @@ case class BpeFoldMerges(child: Expression, merges: Array[(String, String)])
 
   @transient private lazy val evaluator = new BpeFoldEval(merges)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bpe_fold_merges expects array<string>, got ${t.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    BpeMergeOps.checkSymbols("bpe_fold_merges", child.dataType)
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
@@ -108,11 +116,8 @@ case class BpeMergeDeltas(child: Expression, prior: Array[(String, String)],
 
   @transient private lazy val evaluator = new BpeDeltaEval(prior, a, b)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bpe_merge_deltas expects array<string>, got ${t.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    BpeMergeOps.checkSymbols("bpe_merge_deltas", child.dataType)
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("a", StringType, nullable = false),

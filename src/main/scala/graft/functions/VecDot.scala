@@ -96,8 +96,6 @@ case class VecDot(left: Expression, right: Expression)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // partitioning-preserving union for the as-of layer (see graft.plans)
-    ext.injectPlannerStrategy(_ => graft.plans.CoPartitionedUnionStrategy)
     ext.injectFunction((
       new FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),

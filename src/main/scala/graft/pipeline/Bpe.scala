@@ -329,7 +329,15 @@ object BpeTrainer {
     */
   def train(corpus: DataFrame, textCol: String, nMerges: Int,
             checkpointEvery: Int = 16, maxLocalWords: Int = 2000000,
-            maxLocalPairs: Long = 8000000L): BpeModel = {
+            maxLocalPairs: Long = 8000000L): BpeModel =
+    trainWithRegime(corpus, textCol, nMerges, checkpointEvery, maxLocalWords, maxLocalPairs)._1
+
+  /** [[train]], also naming the regime that produced the merges: "local",
+    * "incremental", "recount", or "incremental+recount" when the driver pair
+    * table outgrew `maxLocalPairs` mid-run and the recount regime finished.
+    */
+  private[pipeline] def trainWithRegime(corpus: DataFrame, textCol: String, nMerges: Int,
+      checkpointEvery: Int, maxLocalWords: Int, maxLocalPairs: Long): (BpeModel, String) = {
     require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
     require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
     // ONE corpus scan: normalized word frequencies (the trainer's working
@@ -348,12 +356,12 @@ object BpeTrainer {
     // executeTake accumulator-race note in Dedup.connectedComponents.
     if (maxLocalWords > 0 && words.count() <= maxLocalWords) {
       val head = words.collect()
-      return new BpeModel(trainLocalMerges(
-        head.map(r => (r.getString(0), r.getLong(1))), nMerges))
+      return (new BpeModel(trainLocalMerges(
+        head.map(r => (r.getString(0), r.getLong(1))), nMerges)), "local")
     }
     // base symbols: code points + </w> (an empty-merge model's tokenize)
     val baseModel = new BpeModel(Array.empty)
-    var state = words
+    val state = words
       .select(BpeModel.tokensCol(col("word"), baseModel).as("sym"), col("cnt"))
       .localCheckpoint(true) // materialize: later rounds never rescan the corpus
     // incremental DISTRIBUTED regime: if the distinct adjacent-pair table
@@ -371,13 +379,28 @@ object BpeTrainer {
       if (nPairs <= maxLocalPairs) {
         val init = pairAgg.collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2)))
         pairAgg.unpersist()
-        return new BpeModel(
-          trainDistributedIncremental(state, init, nMerges, checkpointEvery))
+        val (done, rest) = trainDistributedIncremental(state, init, nMerges, checkpointEvery, maxLocalPairs)
+        return rest match {
+          case None => (new BpeModel(done), "incremental")
+          // the pair table outgrew the bound: the recount regime finishes
+          // from the symbol state with every merge so far applied
+          case Some(folded) =>
+            (new BpeModel(recountMerges(folded, done, nMerges, checkpointEvery)), "incremental+recount")
+        }
       }
       pairAgg.unpersist()
     }
-    val merges = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    var round = 0
+    (new BpeModel(recountMerges(state, Array.empty, nMerges, checkpointEvery)), "recount")
+  }
+
+  /** The full per-round recount regime, continuing after `done` merges
+    * from `state0`, the symbol state with those merges applied.
+    */
+  private def recountMerges(state0: DataFrame, done: Array[(String, String)], nMerges: Int,
+                            checkpointEvery: Int): Array[(String, String)] = {
+    var state = state0
+    val merges = scala.collection.mutable.ArrayBuffer[(String, String)](done.toIndexedSeq: _*)
+    var round = merges.length
     var exhausted = false
     while (round < nMerges && !exhausted) {
       val best = state.filter(size(col("sym")) >= 2)
@@ -398,7 +421,7 @@ object BpeTrainer {
         round += 1
       }
     }
-    new BpeModel(merges.toArray)
+    merges.toArray
   }
 
   /** Incremental distributed merge loop: pair counts + lazy-deletion heap
@@ -406,8 +429,14 @@ object BpeTrainer {
     * index), the word table distributed. Per round: argmax locally (zero
     * jobs), then ONE job computing the pair-count deltas of the words
     * that contain the merged pair (−cnt for their old adjacent pairs,
-    * +cnt for the post-merge ones) with a bounded collect — pairs touched
-    * by one merge, not the full table.
+    * +cnt for the post-merge ones) and collecting them — pairs touched by
+    * one merge, not the full table.
+    *
+    * The driver pair table gains the new (x, ab) / (ab, y) pairs every
+    * round, so its size is re-checked against `maxLocalPairs` after each
+    * one: once over, the loop folds its pending merges into a checkpoint
+    * and returns it with the merges so far, and the full recount regime
+    * finishes the run (merge-for-merge the same sequence).
     *
     * The symbol state is NEVER a chained interpreted lineage: each
     * round's delta query is the single native
@@ -421,7 +450,7 @@ object BpeTrainer {
     */
   private def trainDistributedIncremental(state0: DataFrame,
       init: Array[((String, String), Long)], nMerges: Int,
-      checkpointEvery: Int): Array[(String, String)] = {
+      checkpointEvery: Int, maxLocalPairs: Long): (Array[(String, String)], Option[DataFrame]) = {
     val bridge = org.apache.spark.sql.graft.GraftSqlBridge
     var ckpt = state0
     val pending = scala.collection.mutable.ArrayBuffer[(String, String)]()
@@ -482,15 +511,19 @@ object BpeTrainer {
         deltas.foreach(r => bump((r.getString(0), r.getString(1)), r.getLong(2)))
         flushDirty()
         pending += ((a, b))
-        if (pending.length >= checkpointEvery) {
+        // the pair table grows by the new (x, ab) / (ab, y) pairs each
+        // round: past the bound the driver hands over to the recount regime
+        val handOver = pc.size() > maxLocalPairs && merges.length < nMerges
+        if (pending.length >= checkpointEvery || handOver) {
           val foldCol = bridge.column(graft.functions.BpeFoldMerges(
             bridge.expression(col("sym")), pending.toArray))
           ckpt = ckpt.select(foldCol.as("sym"), col("cnt")).localCheckpoint(true)
           pending.clear()
         }
+        if (handOver) return (merges.toArray, Some(ckpt))
       }
     }
-    merges.toArray
+    (merges.toArray, None)
   }
 
   /** Code-point lexicographic comparison — equal to UTF-8 bytewise order

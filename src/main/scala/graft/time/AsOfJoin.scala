@@ -1,20 +1,24 @@
 package graft.time
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DoubleType, MapType}
 
 /** Sort-merge as-of join (SURVEY.md §2.10): for each left row (key, ts),
   * attach the payload of the latest right row with r.ts <= l.ts and the same
   * key. Spark has no built-in as-of join; composing join+window explodes
   * (every left row matches all earlier right rows before ranking).
   *
-  * Physical shape: union-tag both sides, then forward-fill the right payload
-  * with `last(_, ignoreNulls).over(key, salt | ts, tag)` and keep the left
-  * rows — ONE hash exchange + ONE sort, all inside native WindowExec
-  * (whole-stage-codegen-friendly, no Row materialization; a custom
-  * mapPartitions merge measured ~2x slower at local[32] from GC pressure).
+  * Physical shape: ONE native operator, [[graft.plans.AsOfMerge]]. Both
+  * sides must be clustered on the key and sorted by (key, ts); each left row
+  * then streams against a one-row-lookahead cursor over the right rows of
+  * its partition, over `InternalRow`s with no `Row` conversion. A left side
+  * that already has that layout — the persisted `PointInTime.baseFeatures`
+  * output, clustered on conv_id and sorted by (conv_id, ts, turn_idx) — gets
+  * no exchange and no sort; only the (small) right side is sorted. Keys keep
+  * their own type. The operator references only key, ts and payload, so
+  * left columns no consumer reads are pruned below it.
   *
   * Skew: keys whose LEFT row count exceeds `skewThreshold` are salted into
   * `salts` sub-partitions; the right side is replicated to every salt of a
@@ -51,13 +55,15 @@ object AsOfJoin {
   private[time] def rangeBounds(left: DataFrame, right: DataFrame, keyCol: String,
                                 tsCol: String, keys: Seq[String], salts: Int): Map[String, Seq[Double]] = {
     if (keys.isEmpty || salts <= 1) return Map.empty
+    val keyType = left.schema(keyCol).dataType
     def side(df: DataFrame) = df
-      .filter(col(keyCol).cast("string").isin(keys: _*))
-      .select(col(keyCol).cast("string").as("__k"), tsDouble(df, tsCol).as("__t"))
+      .filter(col(keyCol).isin(keys.map(k => lit(k).cast(keyType)): _*))
+      .select(col(keyCol).as("__k"), tsDouble(df, tsCol).as("__t"))
     val pcts = array((1 until salts).map(i => lit(i.toDouble / salts)): _*)
     side(left).union(side(right))
       .groupBy("__k")
       .agg(percentile_approx(col("__t"), pcts, lit(1000)).as("__b"))
+      .select(col("__k").cast("string"), col("__b"))
       .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
   }
 
@@ -71,12 +77,6 @@ object AsOfJoin {
   def asof(left: DataFrame, right: DataFrame, keyCol: String, tsCol: String,
            rightPayload: Seq[String], prefix: String = "asof_",
            skewThreshold: Long = 2000000L, salts: Int = 8,
-           numPartitions: Int = 0,
-           /** Test seam: force the built-in unionByName formulation even
-             * when CoPartitionedUnion is plannable (parity coverage for
-             * sessions without GraftExtensions).
-             */
-           forceBuiltinUnion: Boolean = false,
            /** Caller-supplied skew knowledge: `Some(keys)` salts exactly
              * those keys and SKIPS the detection scan; `Some(Nil)` asserts
              * "no skew" and also skips it. `None` (default) runs the
@@ -89,13 +89,13 @@ object AsOfJoin {
            skewKeys: Option[Seq[String]] = None,
            /** "backward" (default): latest right row with r.ts <= l.ts;
              * "forward": earliest right row with r.ts >= l.ts — the same
-             * one-exchange window plan over a mirrored sort order.
+             * merge over the same ascending order.
              */
            direction: String = "backward",
            /** Bounded staleness (feature-store semantics): a match further
              * than this many seconds from l.ts (in the join direction)
-             * yields NULL payload instead — evaluated per row after the
-             * forward-fill, zero extra plan nodes.
+             * yields NULL payload instead — evaluated per row in a
+             * projection over the merge's matched-ts column.
              */
            toleranceSecs: Option[Double] = None,
            /** Keys whose RIGHT side is heavy enough that one task sorting
@@ -112,146 +112,115 @@ object AsOfJoin {
     require(direction == "backward" || direction == "forward",
       s"direction must be backward|forward, got $direction")
     val fwd = direction == "forward"
+    val keyType = left.schema(keyCol).dataType
+    require(right.schema(keyCol).dataType == keyType && right.schema(tsCol).dataType == left.schema(tsCol).dataType,
+      s"as-of sides must agree on the types of $keyCol and $tsCol")
+    graft.plans.GraftStrategy.install(spark)
 
-    // top skewed keys on the left (bounded collect), unless supplied
-    val leftSkewedAll: Seq[String] = skewKeys.getOrElse(
-      left.groupBy(col(keyCol).cast("string").as("__k")).count()
-        .filter(col("count") > skewThreshold)
-        .orderBy(desc("count")).limit(1000)
-        .collect().map(_.getString(0)).toSeq)
-    val rightHeavy: Seq[String] = rightSkewKeys.getOrElse(
-      right.groupBy(col(keyCol).cast("string").as("__k")).count()
-        .filter(col("count") > skewThreshold)
-        .orderBy(desc("count")).limit(1000)
-        .collect().map(_.getString(0)).toSeq)
+    val leftSkewedAll: Seq[String] = skewKeys.getOrElse(topKeys(left, keyCol, skewThreshold))
+    val rightHeavy: Seq[String] = rightSkewKeys.getOrElse(topKeys(right, keyCol, skewThreshold))
     // a key heavy on BOTH sides goes to ts-range salting (its boundaries
     // come from the combined timeline, so both sides split evenly)
     val skewedKeys = leftSkewedAll.filterNot(rightHeavy.toSet)
-    val isSkewed = if (skewedKeys.isEmpty) lit(false)
-    else col(keyCol).cast("string").isin(skewedKeys: _*)
-    val isRightHeavy = if (rightHeavy.isEmpty) lit(false)
-    else col(keyCol).cast("string").isin(rightHeavy: _*)
-    val bounds = rangeBounds(left, right, keyCol, tsCol, rightHeavy, salts)
-    // map-literal key -> array<double> of interior boundaries (bounded:
-    // <= 1000 keys x (salts-1) doubles)
-    val boundsMap: Column =
-      if (bounds.isEmpty) lit(null).cast("map<string,array<double>>")
-      else map(bounds.toSeq.sortBy(_._1).flatMap { case (kk, bs) =>
-        Seq(lit(kk), array(bs.map(lit): _*))
-      }: _*)
+    val salted = skewedKeys.nonEmpty || rightHeavy.nonEmpty
 
-    val lCols = left.columns.toSeq
     def q(c: String) = col(s"`${c.replace("`", "``")}`")
-
-    // aligned union: [__k, __ts, __salt, __tag, leftCols..., payload...]
-    val keyStr = col(keyCol).cast("string")
-    val rangeSaltL = rangeSaltExpr(boundsMap, keyStr, tsDouble(left, tsCol))
-    val rangeSaltR = rangeSaltExpr(boundsMap, keyStr, tsDouble(right, tsCol))
-    val lFrame = left.select(
-      Seq(keyStr.as("__k"), col(tsCol).as("__ts"),
-        when(isRightHeavy, rangeSaltL)
-          .when(isSkewed, pmod(xxhash64(col(tsCol)), lit(salts)).cast("int"))
-          .otherwise(lit(0)).as("__salt"),
-        lit(1).as("__tag")) ++
-        lCols.map(q) ++
-        rightPayload.map(c => lit(null).cast(right.schema(c).dataType).as(prefix + c)): _*)
-    val saltArr = array((0 until salts).map(lit): _*)
-    val rFrame0 = right.select(
-      Seq(keyStr.as("__k"), col(tsCol).as("__ts"),
-        explode(when(isRightHeavy, array(rangeSaltR))
-          .when(isSkewed, saltArr).otherwise(array(lit(0)))).as("__salt"),
-        lit(0).as("__tag")) ++
-        lCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
-        rightPayload.map(c => q(c).as(prefix + c)): _*)
-    // Boundary carry-in for ts-range-salted keys: each range's extremal
-    // right row (latest for backward, earliest for forward) is COPIED into
-    // every range that could need it as its out-of-range match — at most
-    // keys x salts² tiny rows. A copy keeps its ORIGINAL ts, so it sorts
-    // before all in-range rows of its target partition and competes
-    // correctly with other carries (the window's last() picks the max-ts
-    // one), and the tolerance gate sees the true matched ts.
-    val rFrame =
-      if (rightHeavy.isEmpty) rFrame0
+    val key = q(keyCol)
+    // skew keys arrive as strings; each is cast ONCE to the key's own type
+    val nativeKeys = (ks: Seq[String]) => ks.map(k => lit(k).cast(keyType))
+    // the right side re-aliased: fresh attribute ids, so a right side derived
+    // from the left (a summary of it) can never alias a left attribute
+    val rKeyTs = Seq(key.as(keyCol), q(tsCol).as(tsCol))
+    val rPay = rightPayload.map(c => q(c).as(c))
+    val (l, r) =
+      if (!salted) (left, right.select(rKeyTs ++ rPay: _*))
       else {
-        val heavyR = right.filter(keyStr.isin(rightHeavy: _*))
-          .select(keyStr.as("__k"), col(tsCol).as("__ts"), rangeSaltR.as("__s0"),
-            struct(rightPayload.map(q): _*).as("__all"))
-        val perRange = heavyR.groupBy("__k", "__s0").agg(
-          (if (fwd) min_by(col("__all"), col("__ts")) else max_by(col("__all"), col("__ts"))).as("__all"),
-          (if (fwd) min(col("__ts")) else max(col("__ts"))).as("__ts"))
-        val targets =
-          if (fwd) when(col("__s0") > 0, sequence(lit(0), col("__s0") - 1))
-            .otherwise(array().cast("array<int>"))
-          else when(col("__s0") < salts - 1, sequence(col("__s0") + 1, lit(salts - 1)))
-            .otherwise(array().cast("array<int>"))
-        val carry = perRange.select(
-          Seq(col("__k"), col("__ts"), explode(targets).as("__salt"),
-            lit(0).as("__tag")) ++
-            lCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
-            rightPayload.map(c => col("__all").getField(c).as(prefix + c)): _*)
-        rFrame0.unionByName(carry)
+        val isSkewed = if (skewedKeys.isEmpty) lit(false) else key.isin(nativeKeys(skewedKeys): _*)
+        val isRightHeavy = if (rightHeavy.isEmpty) lit(false) else key.isin(nativeKeys(rightHeavy): _*)
+        val bounds = rangeBounds(left, right, keyCol, tsCol, rightHeavy, salts)
+        // map-literal key -> array<double> of interior boundaries (bounded:
+        // <= 1000 keys x (salts-1) doubles)
+        val boundsMap: Column =
+          if (bounds.isEmpty) lit(null).cast(MapType(keyType, ArrayType(DoubleType)))
+          else map(bounds.toSeq.sortBy(_._1).flatMap { case (kk, bs) =>
+            Seq(lit(kk).cast(keyType), array(bs.map(lit): _*))
+          }: _*)
+        val rangeSaltL = rangeSaltExpr(boundsMap, key, tsDouble(left, tsCol))
+        val rangeSaltR = rangeSaltExpr(boundsMap, key, tsDouble(right, tsCol))
+        val lSalted = left.withColumn(Salt,
+          when(isRightHeavy, rangeSaltL)
+            .when(isSkewed, pmod(xxhash64(q(tsCol)), lit(salts)).cast("int"))
+            .otherwise(lit(0)))
+        // a left-skewed key's right timeline is replicated to every salt
+        val rSalted = right.withColumn(Salt,
+          explode(when(isRightHeavy, array(rangeSaltR))
+            .when(isSkewed, array((0 until salts).map(lit): _*)).otherwise(array(lit(0)))))
+          .select(rKeyTs ++ Seq(col(Salt)) ++ rPay: _*)
+        // Boundary carry-in for ts-range-salted keys: each range's extremal
+        // right row (latest for backward, earliest for forward) is COPIED into
+        // every range that could need it as its out-of-range match — at most
+        // keys x salts² tiny rows. A copy keeps its ORIGINAL ts, so it sorts
+        // before (backward) / after (forward) all in-range rows of its target
+        // partition and competes correctly with other carries, and the
+        // tolerance gate sees the true matched ts.
+        if (rightHeavy.isEmpty) (lSalted, rSalted)
+        else {
+          val perRange = right.filter(isRightHeavy)
+            .select(key.as("__k"), q(tsCol).as("__ts"), rangeSaltR.as("__s0"),
+              struct(rightPayload.map(q): _*).as("__all"))
+            .groupBy("__k", "__s0").agg(
+              (if (fwd) min_by(col("__all"), col("__ts")) else max_by(col("__all"), col("__ts"))).as("__all"),
+              (if (fwd) min(col("__ts")) else max(col("__ts"))).as("__ts"))
+          val targets =
+            if (fwd) when(col("__s0") > 0, sequence(lit(0), col("__s0") - 1))
+              .otherwise(array().cast("array<int>"))
+            else when(col("__s0") < salts - 1, sequence(col("__s0") + 1, lit(salts - 1)))
+              .otherwise(array().cast("array<int>"))
+          val carry = perRange.select(Seq(col("__k").as(keyCol), col("__ts").as(tsCol),
+            explode(targets).as(Salt)) ++
+            rightPayload.map(c => col("__all").getField(c).as(c)): _*)
+          (lSalted, rSalted.unionByName(carry))
+        }
       }
 
-    // right rows (tag 0) sort before left rows at equal ts => r.ts == l.ts
-    // is visible to the left row, matching "latest right with r.ts <= l.ts".
-    // Forward direction mirrors the scan: ts DESC, so the carried value is
-    // the latest right row SEEN while descending = the EARLIEST right row
-    // with r.ts >= l.ts (equal-ts rights still sort before the left row).
-    val w = Window.partitionBy(col("__k"), col("__salt"))
-      .orderBy(if (fwd) col("__ts").desc else col("__ts").asc, col("__tag"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // union the tagged frames. With GraftExtensions, the custom
-    // CoPartitionedUnion keeps the left side's hash partitioning visible to
-    // the window (built-in UnionExec reports UnknownPartitioning, forcing a
-    // full reshuffle of base + summaries even when the left side — the big
-    // one — is already partitioned by the key, e.g. fresh out of the
-    // point-in-time window layer). EnsureRequirements still inserts the
-    // exchanges needed to make each side key-clustered, so semantics are
-    // identical either way.
-    //
-    // Skewed keys force the BUILT-IN union: salting only helps if the
-    // window's ClusteredDistribution(__k, __salt) actually materializes as a
-    // (key, salt) exchange, and any partitioning on __k alone satisfies that
-    // distribution by the subset rule — so above the key-partitioned custom
-    // union NO exchange is inserted and every salt of a hot key would land
-    // in one task's sort, silently un-doing the mitigation. The built-in
-    // union reports UnknownPartitioning, which guarantees the (__k, __salt)
-    // exchange that spreads each hot key across `salts` partitions. The
-    // shuffle-elimination fast path and the skew path are mutually
-    // exclusive by construction.
-    val unioned: DataFrame =
-      if (!forceBuiltinUnion && skewedKeys.isEmpty && rightHeavy.isEmpty &&
-          graft.plans.CoPartitionedUnion.available(spark)) {
-        val lp = lFrame.queryExecution.analyzed
-        val rp = rFrame.queryExecution.analyzed
-        require(lp.output.map(_.name) == rp.output.map(_.name),
-          "as-of union sides must be column-aligned")
-        org.apache.spark.sql.graft.GraftSqlBridge.ofRows(spark,
-          graft.plans.CoPartitionedUnion(lp, rp,
-            lp.output.filter(_.name == "__k"), rp.output.filter(_.name == "__k")))
-      } else lFrame.unionByName(rFrame)
+    val lp = l.queryExecution.analyzed
+    val rp = r.queryExecution.analyzed
+    val resolver = spark.sessionState.conf.resolver
+    def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, c: String) =
+      p.output.find(a => resolver(a.name, c))
+        .getOrElse(throw new IllegalArgumentException(s"as-of: no column $c"))
+    val saltCols = if (salted) Seq(Salt) else Nil
+    val payload = rightPayload.map(attr(rp, _))
+    val mts = toleranceSecs.map(_ => AttributeReference(MatchTs, left.schema(tsCol).dataType)())
+    val merged = org.apache.spark.sql.graft.GraftSqlBridge.ofRows(spark, graft.plans.AsOfMerge(
+      lp, rp, (keyCol +: saltCols).map(attr(lp, _)), (keyCol +: saltCols).map(attr(rp, _)),
+      attr(lp, tsCol), attr(rp, tsCol), payload,
+      payload.map(a => AttributeReference(prefix + a.name, a.dataType)()), mts,
+      forward = fwd, salted = salted))
+    if (!salted && toleranceSecs.isEmpty) return merged
 
-    // the payload struct is null on left rows, so last(ignoreNulls=true)
-    // carries the latest RIGHT payload forward into each left row; the
-    // matched row's own ts (__mts) rides inside the struct for the
-    // tolerance gate
-    val filled = unioned
-      .withColumn("__pay",
-        when(col("__tag") === 0,
-          struct(rightPayload.map(c => q(prefix + c)) :+ col("__ts").as("__mts"): _*)))
-      .withColumn("__carry", last(col("__pay"), ignoreNulls = true).over(w))
-      .filter(col("__tag") === 1)
     val withinTol: Column = toleranceSecs match {
       case None => lit(true)
       case Some(tol) =>
         val dist =
-          if (fwd) col("__carry").getField("__mts").cast("double") - col("__ts").cast("double")
-          else col("__ts").cast("double") - col("__carry").getField("__mts").cast("double")
+          if (fwd) col(MatchTs).cast("double") - q(tsCol).cast("double")
+          else q(tsCol).cast("double") - col(MatchTs).cast("double")
         dist <= lit(tol)
     }
-    filled.select(lCols.map(q) ++
-      rightPayload.map { c =>
-        when(withinTol, col("__carry").getField(prefix + c)).as(prefix + c)
-      }: _*)
+    merged.select(left.columns.toSeq.map(q) ++
+      rightPayload.map(c => when(withinTol, q(prefix + c)).as(prefix + c)): _*)
   }
+
+  private val Salt = "__salt"
+  private val MatchTs = "__asof_mts"
+
+  /** Up to 1000 keys with more than `threshold` rows, heaviest first, as
+    * strings (the cast runs on the aggregated keys only).
+    */
+  private def topKeys(df: DataFrame, keyCol: String, threshold: Long): Seq[String] =
+    df.groupBy(col(keyCol).as("__k")).count()
+      .filter(col("count") > threshold)
+      .orderBy(desc("count")).limit(1000)
+      .select(col("__k").cast("string"))
+      .collect().map(_.getString(0)).toSeq
 }

@@ -12,11 +12,11 @@ import org.apache.spark.sql.functions._
   * `last(ignoreNulls)` — so recomputing on a time-truncated snapshot yields
   * identical vectors (zero temporal leakage; see LeakageSpec).
   *
-  * Physical shape: all window functions share ONE WindowSpec
-  * (partitionBy(conv_id), orderBy(ts, turn_idx)), so the whole frame costs a
-  * single hash-exchange on conv_id plus one sort; everything downstream is a
-  * narrow projection. `lead` helpers exist for fit-time labeling only and are
-  * intentionally NOT part of [[baseFeatures]] (they would leak).
+  * Physical shape: [[baseFeatures]] is one native scan over a single
+  * hash-exchange on conv_id plus one (conv_id, ts, turn_idx) sort; the
+  * window helpers below share that same WindowSpec. `lead` helpers exist for
+  * fit-time labeling only and are intentionally NOT part of [[baseFeatures]]
+  * (they would leak).
   */
 object PointInTime {
 
@@ -53,44 +53,31 @@ object PointInTime {
     *   conv_id, turn_idx, ts, role, tool,
     *   text_len, turn_idx_delta, secs_since_prev, turns_so_far,
     *   cum_text_len, cum_len_user, cum_len_assistant, cum_len_tool,
-    *   cum_tool_calls, session_id, turns_in_session, secs_in_session,
-    *   last_tool_ffill
+    *   cum_tool_calls, session_id, last_tool_ffill, turns_in_session,
+    *   secs_in_session
+    *
+    * Computed in ONE pass by [[graft.plans.PointInTimeScan]]: text is reduced
+    * to its length before the conv_id exchange, which then carries the
+    * length instead of the text, and the scan folds the sorted stream with
+    * the rules of the lag / running-sum / ffill windows
+    * (rowsBetween(unboundedPreceding, currentRow) over [[convWindow]]) whose
+    * formulation it replaced. Its output keeps the exchange's partitioning
+    * and the sort's order.
     */
   def baseFeatures(turns: DataFrame, gapSecs: Long = 1800L): DataFrame = {
-    val w = convWindow
-    val wc = cum(w)
-    val tsSecs = unix_timestamp(col("ts"))
-    val prevTs = lag(tsSecs, 1).over(w)
-    val gapFlag = when(tsSecs - prevTs > gapSecs, 1).otherwise(0)
-    val rn = row_number().over(w)
-
-    val roleLen = (r: String) =>
-      sum(when(col("role") === r, length(col("text"))).otherwise(0L)).over(wc)
-
-    val withBase = turns.select(
-      col("conv_id"), col("turn_idx"), col("ts"), col("role"), col("tool"),
-      length(col("text")).cast("long").as("text_len"),
-      coalesce(col("turn_idx") - lag(col("turn_idx"), 1).over(w), lit(0)).as("turn_idx_delta"),
-      coalesce(tsSecs - prevTs, lit(0L)).as("secs_since_prev"),
-      rn.as("turns_so_far"),
-      sum(length(col("text"))).over(wc).cast("long").as("cum_text_len"),
-      roleLen("user").as("cum_len_user"),
-      roleLen("assistant").as("cum_len_assistant"),
-      roleLen("tool").as("cum_len_tool"),
-      sum(when(col("tool").isNotNull, 1L).otherwise(0L)).over(wc).as("cum_tool_calls"),
-      sum(gapFlag).over(wc).as("session_id"),
-      // row number at which the current session started (same single window —
-      // no second shuffle for the per-session counters below)
-      max(when(gapFlag === 1 || rn === 1, rn)).over(wc).as("session_start_rn"),
-      max(when(gapFlag === 1 || rn === 1, tsSecs)).over(wc).as("session_start_ts"),
-      tsSecs.as("ts_secs"),
-      last(col("tool"), ignoreNulls = true).over(wc).as("last_tool_ffill")
-    )
-
-    withBase
-      .withColumn("turns_in_session", col("turns_so_far") - col("session_start_rn") + 1)
-      .withColumn("secs_in_session", col("ts_secs") - col("session_start_ts"))
-      .drop("session_start_rn", "session_start_ts", "ts_secs")
+    val spark = turns.sparkSession
+    graft.plans.GraftStrategy.install(spark)
+    val in = turns.select(col("conv_id"), col("turn_idx"), col("ts"), col("role"), col("tool"),
+      length(col("text")).cast("long").as("text_len"))
+    // per-row terms, resolved against `in` and evaluated inside the scan
+    val roleLen = (r: String) => when(col("role") === r, col("text_len")).otherwise(0L)
+    val terms = in.select(unix_timestamp(col("ts")), roleLen("user"), roleLen("assistant"), roleLen("tool"))
+      .queryExecution.analyzed.expressions.map {
+        case a: org.apache.spark.sql.catalyst.expressions.Alias => a.child
+        case e => e
+      }
+    org.apache.spark.sql.graft.GraftSqlBridge.ofRows(spark,
+      graft.plans.PointInTimeScan(gapSecs, in.queryExecution.analyzed, terms))
   }
 
   /** Names of the numeric feature columns produced by [[baseFeatures]] —

@@ -258,23 +258,37 @@ object Drive {
       val tb = time(Similarity.probeClustersBuiltin(col("embedding"), cents, 4))
       println(f"IVF_PROBE_K256 native=$tn%.2fs builtin=$tb%.2fs (warm=$warm%.2fs)")
     }
-    // round 3: as-of with caller-supplied skew keys — no pre-scan job, and
-    // the salted path must NOT plan the custom union (salt spreading)
+    // round 3: as-of with caller-supplied skew keys — no pre-scan job; the
+    // plain path merges the persisted layer with no exchange, the salted one
+    // over a (key, salt) exchange (salt spreading)
     {
       import graft.time.AsOfJoin
-      val sess = f.groupBy(col("conv_id"), col("session_id"))
+      import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+      import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+      def shape(df: org.apache.spark.sql.DataFrame): (Int, Seq[Seq[String]]) = {
+        val plan = df.queryExecution.executedPlan
+        val h = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        (h.collect(plan) { case m: graft.plans.AsOfMergeExec => m }.size,
+          h.collect(plan) { case e: ShuffleExchangeLike => e.outputPartitioning }.collect {
+            case p: HashPartitioning => p.references.toSeq.map(_.name)
+          })
+      }
+      val persisted = f.persist()
+      persisted.count()
+      val sess = persisted.groupBy(col("conv_id"), col("session_id"))
         .agg(max(col("ts")).as("ts"), sum(col("text_len")).as("session_len"))
-      val lhs = f.select("conv_id", "turn_idx", "ts")
-      val plain = AsOfJoin.asof(lhs, sess, "conv_id", "ts", Seq("session_len"), skewKeys = Some(Nil))
-      val salted = AsOfJoin.asof(lhs, sess, "conv_id", "ts", Seq("session_len"),
+      val plain = AsOfJoin.asof(persisted, sess, "conv_id", "ts", Seq("session_len"), skewKeys = Some(Nil))
+      val salted = AsOfJoin.asof(persisted, sess, "conv_id", "ts", Seq("session_len"),
         skewKeys = Some(Seq(f.select("conv_id").first().getString(0))))
-      val auto = AsOfJoin.asof(lhs, sess, "conv_id", "ts", Seq("session_len"))
+      val auto = AsOfJoin.asof(persisted, sess, "conv_id", "ts", Seq("session_len"))
       println("ASOF_SKEWKEYS plain=" + plain.count() + " salted=" + salted.count() +
         " auto=" + auto.count() + " (all equal expected)")
-      println("PLAIN_USES_CUSTOM_UNION=" +
-        plain.queryExecution.executedPlan.toString.contains("CoPartitionedUnion") +
-        " SALTED_USES_BUILTIN=" +
-        !salted.queryExecution.executedPlan.toString.contains("CoPartitionedUnion"))
+      val (plainMerges, plainExch) = shape(plain)
+      val (saltedMerges, saltedExch) = shape(salted)
+      println("PLAIN_MERGE_NO_EXCHANGE=" + (plainMerges == 1 && plainExch.isEmpty) +
+        " SALTED_MERGE_KEY_SALT_EXCHANGE=" + (saltedMerges == 1 && saltedExch.nonEmpty &&
+          saltedExch.forall(_ == Seq("conv_id", "__salt"))))
+      persisted.unpersist()
     }
     // round 3: FeatureSelector shell + weird column names through the
     // public fit/score path (quoting regression probes)

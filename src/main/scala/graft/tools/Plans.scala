@@ -7,7 +7,8 @@ import graft.time.{AsOfJoin, PointInTime, TranscriptGen}
 
 /** Dumps the physical plans of the flagship operators for scale review
   * (PLANS.md). Checks, per plan, the properties that matter at 100 TB:
-  * single exchange for the point-in-time layer, shuffle-free synthesis
+  * single exchange for the point-in-time layer, an as-of merge that adds no
+  * exchange over it, shuffle-free synthesis
   * projection, broadcast on the knn query side, pushed filters/pruned
   * schema on parquet scans.
   *
@@ -33,11 +34,11 @@ object Plans {
 
     val turns = TranscriptGen.generate(spark, 500, 20, 42).toDF()
 
-    section("pointInTime.baseFeatures — ONE exchange + ONE sort for all windows") {
+    section("pointInTime.baseFeatures — ONE exchange + ONE sort feeding one PointInTimeScan") {
       PointInTime.baseFeatures(turns).explain("formatted")
     }
 
-    section("as-of join — union + single window, no join explosion") {
+    section("as-of join — AsOfMerge over (key, ts)-sorted sides, no join explosion") {
       val base = PointInTime.baseFeatures(turns)
       val sessions = base.groupBy(col("conv_id"), col("session_id"))
         .agg(max(col("ts")).as("ts"), sum(col("text_len")).as("session_len"))
@@ -91,11 +92,14 @@ object Plans {
       //                      back-to-back: hashpartitioning(conv_id)
       //                      satisfies ClusteredDistribution(conv_id,
       //                      session_id) via the cached base)
-      //   as-of union win  = 1 exchange + 1 sort (UnionExec reports
-      //                      UnknownPartitioning even for co-partitioned
-      //                      children — unavoidable in vanilla Spark)
-      // => the turns table is shuffled exactly twice end-to-end.
-      println(s"EXCHANGES=$nExch SORTS=$nSort (raw count incl. cached-plan reprints; true topology: 2 shuffles, see note)")
+      //   as-of merge      = 0 exchanges on the left (the cached base is
+      //                      clustered on conv_id and sorted by (conv_id,
+      //                      ts, turn_idx)) + 1 sort of the session rows
+      // => the turns table is shuffled exactly once end-to-end. Before the
+      // cache is materialized its partitioning is not yet known, so the
+      // initial plan shows exchanges that AQE drops once the cache stage
+      // has run.
+      println(s"EXCHANGES=$nExch SORTS=$nSort (raw count incl. cached-plan reprints; true topology: 1 shuffle, see note)")
       base.unpersist()
     }
 

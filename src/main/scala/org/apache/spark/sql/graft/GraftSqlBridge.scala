@@ -5,7 +5,7 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Thin bridge into the `private[sql]` Dataset constructor, used to hand a
-  * custom LogicalPlan (graft.plans.CoPartitionedUnion) back to the public
+  * custom LogicalPlan (graft.plans.AsOfMerge, graft.plans.PointInTimeScan) back to the public
   * DataFrame API. Lives under org.apache.spark.sql solely for access scope.
   */
 object GraftSqlBridge {

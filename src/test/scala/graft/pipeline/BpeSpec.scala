@@ -131,6 +131,41 @@ class BpeSpec extends SparkSpec {
     assert(tiny.merges.length < 50 && tiny.tokenize("ab").toSeq == Seq("ab</w>"))
   }
 
+  test("a driver pair table that outgrows maxLocalPairs hands over to the recount regime") {
+    val src = scala.io.Source.fromFile(res("/fixtures/bpe_corpus.txt"), "UTF-8")
+    val corpusLines = try src.getLines().toVector finally src.close()
+    val corpus = corpusLines.toDF("text").repartition(3)
+    // the bound is the starting pair table exactly: it is admitted, and the
+    // first round that adds more pairs than it removes crosses it
+    val base = new BpeModel(Array.empty)
+    val words = corpusLines.flatMap(_.trim.toLowerCase(java.util.Locale.ROOT).split("\\s+")).filter(_.nonEmpty).distinct
+    val nPairs = words.flatMap(w => base.tokenizeWord(w).sliding(2).collect { case Array(a, b) => (a, b) }).distinct.size
+    val (m, regime) = BpeTrainer.trainWithRegime(corpus, "text", nMerges = 200, checkpointEvery = 16,
+      maxLocalWords = 0, maxLocalPairs = nPairs.toLong)
+    assert(regime == "incremental+recount", regime)
+    assert(m.merges.toSeq == model.merges.toSeq, "hand-over changed the merges")
+    // and the untouched bound keeps the whole run incremental
+    assert(BpeTrainer.trainWithRegime(corpus, "text", nMerges = 200, checkpointEvery = 16,
+      maxLocalWords = 0, maxLocalPairs = 8000000L)._2 == "incremental")
+  }
+
+  test("merge-fold expressions reject symbol arrays that admit null elements") {
+    import graft.functions.{BpeFoldMerges, BpeMergeDeltas}
+    import org.apache.spark.sql.graft.GraftSqlBridge.{column, expression}
+    val df = Seq(Seq("a", null, "b")).toDF("sym")
+    assert(df.schema("sym").dataType == org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.StringType, containsNull = true))
+    for (e <- Seq(BpeFoldMerges(expression(col("sym")), Array(("a", "b"))),
+                  BpeMergeDeltas(expression(col("sym")), Array.empty, "a", "b"))) {
+      val err = intercept[org.apache.spark.sql.AnalysisException](df.select(column(e)).collect())
+      assert(err.getMessage.contains("non-null elements"), err.getMessage)
+    }
+    // the trainer's own symbol arrays are non-null and still accepted
+    val ok = Seq("ab").toDF("w").select(BpeModel.tokensCol(col("w"), new BpeModel(Array.empty)).as("sym"))
+    assert(ok.select(column(BpeFoldMerges(expression(col("sym")), Array(("a", "b"))))).head().getSeq[String](0)
+      == Seq("ab", "</w>"))
+  }
+
   test("byte-fallback encoder matches the Python golden and round-trips") {
     val vocabB = BpeModel.loadVocabFile(res("/fixtures/bpe_vocab_bytes.txt"))
     val encB = new BpeEncoder(model, vocabB, byteFallback = true)

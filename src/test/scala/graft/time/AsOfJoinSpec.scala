@@ -3,11 +3,15 @@ package graft.time
 import java.sql.Timestamp
 
 import graft.SparkSpec
+import graft.plans.{AsOfMerge, AsOfMergeExec}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-class AsOfJoinSpec extends SparkSpec {
+class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def ts(s: Long) = new Timestamp(s * 1000L)
@@ -82,19 +86,30 @@ class AsOfJoinSpec extends SparkSpec {
     }
   }
 
-  test("skew salting forces the built-in union so hot keys spread across salts") {
+  test("salted path exchanges on (key, salt) so hot keys spread across salts") {
     val left = (0 until 400).map(i => ("hot", ts(i.toLong))).toDF("k", "ts")
     val right = Seq(("hot", ts(10), 1.0)).toDF("k", "ts", "v")
-    // salted path: the custom union must NOT be planned (its key-only
-    // partitioning would satisfy the window's (key, salt) distribution by
-    // the subset rule and collapse all salts of a hot key into one task)
+    // salted path: the merge must sit on a (key, salt) exchange — a key-only
+    // partitioning would satisfy (key, salt) by the subset rule and collapse
+    // all salts of a hot key into one task
     val salted = AsOfJoin.asof(left, right, "k", "ts", Seq("v"), skewKeys = Some(Seq("hot")))
-    assert(!salted.queryExecution.executedPlan.toString.contains("CoPartitionedUnion"),
-      "custom union planned on the salted path")
+    assert(merges(salted) == 1, "merge operator not planned on the salted path")
+    val keys = exchangeKeys(salted)
+    assert(keys.nonEmpty && keys.forall(_ == Seq("k", "__salt")), s"salted exchanges: $keys")
     assert(salted.count() == 400)
-    // unsalted path keeps the shuffle-eliminating custom union
-    val plain = AsOfJoin.asof(left, right, "k", "ts", Seq("v"), skewKeys = Some(Nil))
-    assert(plain.queryExecution.executedPlan.toString.contains("CoPartitionedUnion"))
+    // unsalted path over a key-clustered, (key, ts)-sorted left side (the
+    // persisted point-in-time layer) plans the merge with no exchange at all
+    val turns = TranscriptGen.generate(spark, 30, 10, 5).toDF()
+    val base = PointInTime.baseFeatures(turns).persist()
+    try {
+      base.count()
+      val sessions = base.groupBy(col("conv_id"), col("session_id"))
+        .agg(max(col("ts")).as("ts"), sum(col("text_len")).as("session_len"))
+      val plain = AsOfJoin.asof(base, sessions, "conv_id", "ts", Seq("session_len"), skewKeys = Some(Nil))
+      assert(merges(plain) == 1, "merge operator not planned on the plain path")
+      assert(exchangeKeys(plain).isEmpty, plain.queryExecution.executedPlan.toString)
+      assert(plain.count() == turns.count())
+    } finally base.unpersist()
   }
 
   test("right-side-heavy key: ts-range salting with carry-in matches the unsalted join") {
@@ -178,19 +193,122 @@ class AsOfJoinSpec extends SparkSpec {
     assert(f2(0).getDouble(0) == 2.0 && f2(1).isNullAt(0))
   }
 
-  test("CoPartitionedUnion and built-in union formulations agree exactly") {
-    // TestSpark carries GraftExtensions, so the default path plans the
-    // custom union; the forced built-in path covers extension-less sessions
+  test("merge operator and union+window oracle agree exactly") {
     val rng = new scala.util.Random(11)
     val left = (0 until 600).map(_ =>
       (s"k${rng.nextInt(9)}", ts(rng.nextInt(50000).toLong))).toDF("k", "ts")
     val right = (0 until 150).map(i =>
       (s"k${rng.nextInt(9)}", ts(rng.nextInt(50000).toLong), i.toDouble)).toDF("k", "ts", "v")
-    val fast = AsOfJoin.asof(left, right, "k", "ts", Seq("v"))
-    val slow = AsOfJoin.asof(left, right, "k", "ts", Seq("v"), forceBuiltinUnion = true)
-    assert(fast.exceptAll(slow).count() == 0 && slow.exceptAll(fast).count() == 0)
-    // and the custom node is actually in the default plan
-    val planStr = fast.queryExecution.executedPlan.toString
-    assert(planStr.contains("CoPartitionedUnion"), "custom union not planned")
+    val got = AsOfJoin.asof(left, right, "k", "ts", Seq("v"))
+    assert(merges(got) == 1, "merge operator not planned")
+    assertSame(got, WindowOracles.asof(left, right, "k", "ts", Seq("v")))
+  }
+
+  /** Merge operators in the executed plan. */
+  private def merges(df: DataFrame): Int =
+    collect(df.queryExecution.executedPlan) { case m: AsOfMergeExec => m }.size
+
+  /** Hash keys of every shuffle exchange in the executed plan. */
+  private def exchangeKeys(df: DataFrame): Seq[Seq[String]] =
+    collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeLike => e }.map {
+      _.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.map {
+          case a: org.apache.spark.sql.catalyst.expressions.Attribute => a.name
+          case other => other.sql
+        }
+        case other => Seq(other.toString)
+      }
+    }
+
+  /** Equal schemas (names, types, nullability) and equal row multisets. */
+  private def assertSame(got: DataFrame, exp: DataFrame, clue: String = ""): Unit = {
+    assert(got.schema == exp.schema, s"$clue schema ${got.schema.treeString} vs ${exp.schema.treeString}")
+    assert(got.exceptAll(exp).count() == 0 && exp.exceptAll(got).count() == 0, s"$clue rows differ")
+  }
+
+  private def bothDirections(left: DataFrame, right: DataFrame, key: String, pay: Seq[String],
+                             clue: String): Unit =
+    for (dir <- Seq("backward", "forward"); tol <- Seq[Option[Double]](None, Some(30.0))) {
+      val got = AsOfJoin.asof(left, right, key, "ts", pay, direction = dir, toleranceSecs = tol,
+        skewKeys = Some(Nil))
+      assertSame(got, WindowOracles.asof(left, right, key, "ts", pay, direction = dir, toleranceSecs = tol),
+        s"$clue dir=$dir tol=$tol")
+    }
+
+  test("hostile: null keys and null ts on either side match the oracle") {
+    val schemaL = "k string, ts timestamp, id int"
+    val schemaR = "k string, ts timestamp, v double"
+    def rows(xs: Seq[(String, java.lang.Long, Any)]) =
+      xs.map { case (k, t, x) => org.apache.spark.sql.Row(k, if (t == null) null else ts(t), x) }
+    val left = spark.createDataFrame(spark.sparkContext.parallelize(rows(Seq(
+      ("a", 10L, 1), ("a", null, 2), (null, 20L, 3), (null, null, 4), ("b", 5L, 5),
+      ("a", 40L, 6), (null, 50L, 7), ("b", null, 8)))), org.apache.spark.sql.types.StructType.fromDDL(schemaL))
+    val right = spark.createDataFrame(spark.sparkContext.parallelize(rows(Seq(
+      ("a", 9L, 1.0), ("a", null, 2.0), (null, 15L, 3.0), (null, null, 4.0), ("b", 6L, null),
+      ("a", 41L, 6.0), (null, 60L, 7.0)))), org.apache.spark.sql.types.StructType.fromDDL(schemaR))
+    bothDirections(left, right, "k", Seq("v"), "nulls")
+  }
+
+  test("hostile: empty right, one-sided keys and partitions without right rows") {
+    val rng = new scala.util.Random(41)
+    val left = (0 until 300).map(i =>
+      (s"k${rng.nextInt(40)}", ts(rng.nextInt(5000).toLong), i)).toDF("k", "ts", "id")
+    // 40 left keys over 4 shuffle partitions, right rows on 2 of them plus
+    // keys the left never has
+    val right = (0 until 60).map(i =>
+      (Seq("k3", "k17", "zz1", "zz2")(i % 4), ts(rng.nextInt(5000).toLong), i.toDouble)).toDF("k", "ts", "v")
+    bothDirections(left, right, "k", Seq("v"), "sparse right")
+    bothDirections(left, right.limit(0), "k", Seq("v"), "empty right")
+    bothDirections(left.limit(0), right, "k", Seq("v"), "empty left")
+  }
+
+  test("hostile: a long key (q_asof's user_id shape) stays native and matches the oracle") {
+    val rng = new scala.util.Random(43)
+    val events = (0 until 500).map(i =>
+      (i.toLong, (rng.nextInt(30) + 3000000000L), ts(rng.nextInt(20000).toLong),
+        if (rng.nextInt(4) == 0) "purchase" else "view", rng.nextInt(100).toDouble))
+      .toDF("event_id", "user_id", "ts", "event_type", "value")
+    val purchases = events.filter(col("event_type") === "purchase")
+      .groupBy("user_id", "ts").agg(max("value").as("value"))
+    val got = AsOfJoin.asof(events.select("event_id", "user_id", "ts"), purchases,
+      "user_id", "ts", Seq("value"), prefix = "last_purchase_", skewKeys = Some(Nil))
+    assertSame(got, WindowOracles.asof(events.select("event_id", "user_id", "ts"), purchases,
+      "user_id", "ts", Seq("value"), prefix = "last_purchase_"))
+    // no per-row string cast of the key anywhere in the plan
+    assert(!got.queryExecution.executedPlan.toString.contains("cast(user_id"),
+      got.queryExecution.executedPlan.toString)
+    bothDirections(events.select("event_id", "user_id", "ts"), purchases, "user_id", Seq("value"), "long key")
+    // sides must agree on the key type: nothing is cast silently
+    intercept[IllegalArgumentException](AsOfJoin.asof(events.select("event_id", "user_id", "ts"),
+      purchases.withColumn("user_id", col("user_id").cast("string")), "user_id", "ts", Seq("value")))
+  }
+
+  test("hostile: equal right ts on the forward path") {
+    val left = Seq(("a", ts(10)), ("a", ts(20)), ("a", ts(30)), ("b", ts(20))).toDF("k", "ts")
+    // equal (key, ts) rights with equal payloads: the match is exact
+    val tied = Seq(("a", ts(20), 5.0), ("a", ts(20), 5.0), ("a", ts(25), 6.0), ("b", ts(20), 7.0),
+      ("b", ts(20), 7.0)).toDF("k", "ts", "v")
+    bothDirections(left, tied, "k", Seq("v"), "ties")
+    // differing payloads at one ts: the matched ts is the oracle's and the
+    // payload is one of the tied rows'
+    val split = Seq(("a", ts(20), 1.0), ("a", ts(20), 2.0), ("a", ts(20), 3.0)).toDF("k", "ts", "v")
+      .withColumn("rts", col("ts"))
+    val got = AsOfJoin.asof(left, split, "k", "ts", Seq("v", "rts"), direction = "forward")
+      .orderBy("k", "ts").collect()
+    val exp = WindowOracles.asof(left, split, "k", "ts", Seq("v", "rts"), direction = "forward")
+      .orderBy("k", "ts").collect()
+    assert(got.map(_.getAs[Any]("asof_rts")).toSeq == exp.map(_.getAs[Any]("asof_rts")).toSeq)
+    got.filter(!_.isNullAt(2)).foreach(r => assert(Set(1.0, 2.0, 3.0).contains(r.getAs[Double]("asof_v"))))
+  }
+
+  test("a projection above asof that drops left columns prunes them below the merge") {
+    val left = Seq(("a", ts(10), 1, "wide text", 2.5)).toDF("k", "ts", "id", "text", "w")
+    val right = Seq(("a", ts(5), 7.0, "unused")).toDF("k", "ts", "v", "note")
+    val out = AsOfJoin.asof(left, right, "k", "ts", Seq("v"), skewKeys = Some(Nil)).select("id", "asof_v")
+    val sides = out.queryExecution.optimizedPlan.collect {
+      case m: AsOfMerge => (m.left.output.map(_.name).toSet, m.right.output.map(_.name).toSet)
+    }
+    assert(sides == Seq((Set("k", "ts", "id"), Set("k", "ts", "v"))), sides.toString)
+    assert(out.collect().map(r => (r.getInt(0), r.getDouble(1))).toSeq == Seq((1, 7.0)))
   }
 }

@@ -1,9 +1,18 @@
 package graft.time
 
-import graft.SparkSpec
-import org.apache.spark.sql.functions._
+import java.sql.Timestamp
 
-class PointInTimeSpec extends SparkSpec {
+import graft.SparkSpec
+import graft.plans.PointInTimeScanExec
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+class PointInTimeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   lazy val turns = TranscriptGen.generate(spark, nConvs = 50, meanTurns = 20, seed = 42).cache()
@@ -91,5 +100,53 @@ class PointInTimeSpec extends SparkSpec {
       assert(r.getString(3) == lastTool)
       prevConv = r.getString(0)
     }
+  }
+
+  /** Equal schemas (names, types, nullability) and equal row multisets. */
+  private def assertSame(got: DataFrame, exp: DataFrame, clue: String): Unit = {
+    assert(got.schema == exp.schema, s"$clue schema ${got.schema.treeString} vs ${exp.schema.treeString}")
+    assert(got.exceptAll(exp).count() == 0 && exp.exceptAll(got).count() == 0, s"$clue rows differ")
+  }
+
+  test("native scan matches the stacked-window oracle, the 2000-turn conversation included") {
+    assert(turns.filter(col("conv_id") === "c000000").count() == 2000)
+    for (g <- Seq(1800L, 0L, 60L))
+      assertSame(PointInTime.baseFeatures(turns.toDF(), g), WindowOracles.baseFeatures(turns.toDF(), g), s"gap=$g")
+    // through a parquet round trip every input column is nullable
+    val path = java.nio.file.Files.createTempDirectory("pit").resolve("t").toString
+    turns.write.parquet(path)
+    val read = spark.read.parquet(path)
+    assertSame(PointInTime.baseFeatures(read), WindowOracles.baseFeatures(read), "parquet")
+  }
+
+  test("hostile: null text, role, tool, ts and conv_id; empty frame") {
+    val schema = StructType.fromDDL(
+      "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp")
+    def t(s: Long) = new Timestamp(s * 1000L)
+    val rows = Seq[(String, Integer, String, String, String, Timestamp)](
+      ("a", 0, "user", null, null, t(100)), ("a", 1, null, "hello", "bash", t(200)),
+      ("a", 2, "tool", "xyz", null, null), ("a", 3, "assistant", "ok", null, t(5000)),
+      ("a", 4, "user", null, "read", t(5000)), ("a", 5, "tool", "zz", "read", null),
+      ("a", null, "user", "q", null, t(9000)), ("b", 0, null, null, null, null),
+      ("b", 1, "user", null, null, null), ("b", 2, "user", "late", null, t(1)),
+      (null, 0, "user", "n0", "search", t(10)), (null, 1, "assistant", null, null, t(4000)),
+      ("c", 0, "tool", "only", "write", t(-5)))
+      .map(r => Row(r.productIterator.toSeq: _*))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    for (g <- Seq(1800L, 0L))
+      assertSame(PointInTime.baseFeatures(df, g), WindowOracles.baseFeatures(df, g), s"nulls gap=$g")
+    val empty = df.limit(0)
+    assertSame(PointInTime.baseFeatures(empty), WindowOracles.baseFeatures(empty), "empty")
+    assert(PointInTime.baseFeatures(empty).count() == 0)
+  }
+
+  test("the scan keeps the exchange's partitioning and the sort's order") {
+    // a gap no other test caches, so the plan is planned rather than read back
+    val plan = PointInTime.baseFeatures(turns.toDF(), 61L).queryExecution.executedPlan
+    val scans = collect(plan) { case p: PointInTimeScanExec => p }
+    assert(scans.size == 1, plan.toString)
+    assert(collect(plan) { case e: ShuffleExchangeLike => e }.size == 1, plan.toString)
+    assert(collect(plan) { case s: SortExec => s }.size == 1, plan.toString)
+    assert(scans.head.outputOrdering.map(_.child.asInstanceOf[Attribute].name) == Seq("conv_id", "ts", "turn_idx"))
   }
 }
