@@ -270,7 +270,8 @@ object Drive {
         val h = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
         (h.collect(plan) { case m: graft.plans.AsOfMergeExec => m }.size,
           h.collect(plan) { case e: ShuffleExchangeLike => e.outputPartitioning }.collect {
-            case p: HashPartitioning => p.references.toSeq.map(_.name)
+            case p: HashPartitioning => p.expressions.collect {
+              case a: org.apache.spark.sql.catalyst.expressions.Attribute => a.name }
           })
       }
       val persisted = f.persist()
@@ -285,6 +286,7 @@ object Drive {
         " auto=" + auto.count() + " (all equal expected)")
       val (plainMerges, plainExch) = shape(plain)
       val (saltedMerges, saltedExch) = shape(salted)
+      println(s"ASOF_EXCHANGES plain=$plainExch salted=$saltedExch")
       println("PLAIN_MERGE_NO_EXCHANGE=" + (plainMerges == 1 && plainExch.isEmpty) +
         " SALTED_MERGE_KEY_SALT_EXCHANGE=" + (saltedMerges == 1 && saltedExch.nonEmpty &&
           saltedExch.forall(_ == Seq("conv_id", "__salt"))))
