@@ -325,7 +325,7 @@ object SparkEntry {
     }),
 
     // ---- minhash signatures over word 3-grams (one md5 per gram, family by
-    // modular arithmetic; native minhash_signature expression when loaded)
+    // modular arithmetic; the native minhash_signature expression)
     "q_minhash" -> ((s, dir) => {
       val d = spread(s.read.parquet(s"$dir/documents.parquet"), "doc_id")
       d.select(col("doc_id"),

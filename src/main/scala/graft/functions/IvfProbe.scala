@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
 /** Native IVF probe assignment: the indices of the `nProbe` centroids with
   * the highest dot product against the row's vector, ties broken toward the
   * smaller centroid index — exactly the semantics of the declarative
-  * formulation in [[graft.pipeline.Similarity.probeClusters]]
-  * (`array_sort` over `(-sim, idx)` structs of per-centroid `vec_dot`s).
+  * formulation (`array_sort` over `(-sim, idx)` structs of per-centroid
+  * `vec_dot`s), IvfProbeSpec's parity oracle.
   *
   * Why native: the built-in tree embeds k·dim literal nodes (one per
   * centroid coordinate) and allocates + sorts a k-element struct array per
@@ -24,8 +24,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * order with null elements contributing 0.0 — the same rule as
   * [[VecDot]], so assignments are bit-identical to the built-in path.
   * Vectors shorter/longer than `dim` truncate to the overlap (VecDot's
-  * rule). Needs no session extension: it carries non-literal state, so
-  * callers construct it directly via the sql bridge rather than by name.
+  * rule). It carries non-literal state, so it has no SQL name: callers
+  * construct it directly via the sql bridge.
   */
 case class IvfProbe(child: Expression, centsFlat: Array[Double], k: Int, dim: Int,
                     nProbe: Int) extends UnaryExpression {

@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * n-grams (distinct) -> md5 base hash mod (2^61-1) -> 2-universal family ->
   * per-member minimum, all in ONE tight JVM loop per row.
   *
-  * Semantics are bit-identical to the declarative formulation in
-  * [[graft.pipeline.Dedup]] (and therefore to the DuckDB oracle): the base
+  * Semantics are bit-identical to the declarative built-in formulation
+  * (MinhashSigSpec's parity oracle, and therefore the DuckDB oracle): the base
   * hash is the first 15 hex chars of md5 interpreted base-16
   * (= the top 60 bits of the digest), and the family constants come from
   * Dedup.hashA/B/C. The declarative higher-order-function version evaluates

@@ -11,8 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native SimHash: lowercase/trim -> whitespace tokens -> md5 top-60-bit
   * token hash -> per-bit majority vote, in ONE pass over the tokens.
   *
-  * Semantics are bit-identical to the declarative formulation in
-  * [[graft.pipeline.Dedup.simhash]] (and the DuckDB oracle): token hash =
+  * Semantics are bit-identical to the declarative built-in formulation
+  * (and the DuckDB oracle): token hash =
   * first 15 hex chars of md5 base-16, bit b of the result is set iff
   * strictly more tokens have bit b set than clear. The higher-order-function
   * version evaluates `bits` separate `aggregate(...)` lambda traversals of

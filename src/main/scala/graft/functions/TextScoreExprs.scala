@@ -6,10 +6,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native single-pass mirrors of [[graft.pipeline.TextOps.qualityScore]]
-  * and [[graft.pipeline.TextOps.langIdHeuristic]].
+/** Native single-pass expressions behind
+  * [[graft.pipeline.TextOps.qualityScore]] and
+  * [[graft.pipeline.TextOps.langIdHeuristic]].
   *
-  * The declarative `qualityScore` pays SIX regex executions plus three
+  * The declarative quality score pays SIX regex executions plus three
   * `split`s and an interpreted-lambda stopword filter per row, and
   * `langIdHeuristic`'s argmax fold re-evaluates every per-language filter
   * inside every `when` branch (up to 4x4 interpreted array traversals per
@@ -239,7 +240,8 @@ case class LangIdHeuristicExpr(child: Expression) extends UnaryExpression with C
     else TypeCheckResult.TypeCheckFailure(
       s"langid_heuristic expects a string argument, got ${child.dataType.catalogString}")
 
-  // marker lists — MUST stay in lockstep with TextOps.markers
+  // marker lists — MUST stay in lockstep with the declarative oracle's
+  // (BuiltinOracles.langIdHeuristic) and q_lang_id's SQL
   private val langs = Array("en", "de", "es", "fr")
   private val markers: Array[Array[String]] = Array(
     Array("the", "and", "of", "to", "is"),

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -16,13 +16,14 @@ import org.apache.spark.sql.SparkSessionExtensions
   * expression stays inside whole-stage codegen with a primitive loop over
   * the two `ArrayData` buffers: no allocation, no boxing, no virtual calls.
   *
-  * Semantics (deliberately NOT identical to the HOF fallback): mismatched
+  * Semantics (deliberately NOT identical to the HOF formulation): mismatched
   * lengths truncate to the shorter array and null elements contribute 0.0,
   * where `aggregate(zip_with(...))` returns NULL in both cases. Embedding
   * columns are fixed-width non-null vectors, for which the two agree; the
   * laxer rule keeps the hot loop branch-light and total.
   *
-  * Registered as SQL function `vec_dot` via [[GraftExtensions]]
+  * Built by [[graft.pipeline.Similarity.dot]]; also registered as SQL
+  * function `vec_dot` via [[GraftExtensions]]
   * (spark.sql.extensions=graft.functions.GraftExtensions), usable from
   * `functions.call_function("vec_dot", a, b)` or plain SQL.
   */
@@ -91,10 +92,19 @@ case class VecDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session extensions: registers graft's native SQL functions.
+/** Session extensions: registers SQL names for graft's native expressions
+  * (`vec_dot(a, b)`, `simhash(text, 32)`, ... in SQL or `call_function`).
   * Enable with .config("spark.sql.extensions", "graft.functions.GraftExtensions").
+  * The library's Column API builds the same expressions directly and needs
+  * no extension.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  /** Size/shape parameters are fixed per expression: int literals only. */
+  private def intArg(e: Expression, name: String): Int = e match {
+    case Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(s"$name must be an int literal, got $other")
+  }
+
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
       new FunctionIdentifier("vec_dot"),
@@ -108,21 +118,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[SimhashExpr].getName, "simhash"),
       (args: Seq[Expression]) => {
         require(args.length == 2, "simhash(text, bits)")
-        val bits = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(s"bits must be an int literal, got $other")
-        }
-        SimhashExpr(args.head, bits)
+        SimhashExpr(args.head, intArg(args(1), "bits"))
       }))
     ext.injectFunction((
       new FunctionIdentifier("minhash_signature"),
       new ExpressionInfo(classOf[MinhashSig].getName, "minhash_signature"),
       (args: Seq[Expression]) => {
         require(args.length == 3, "minhash_signature(text, numHashes, n)")
-        def intArg(e: Expression, name: String): Int = e match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(s"$name must be an int literal, got $other")
-        }
         MinhashSig(args.head, intArg(args(1), "numHashes"), intArg(args(2), "n"))
       }))
     ext.injectFunction((
@@ -130,21 +132,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
       (args: Seq[Expression]) => {
         require(args.length == 2, "word_ngrams(text, n)")
-        val n = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(s"n must be an int literal, got $other")
-        }
-        WordNgrams(args.head, n)
+        WordNgrams(args.head, intArg(args(1), "n"))
       }))
     ext.injectFunction((
       new FunctionIdentifier("winnow"),
       new ExpressionInfo(classOf[WinnowExpr].getName, "winnow"),
       (args: Seq[Expression]) => {
         require(args.length == 3, "winnow(text, k, w)")
-        def intArg(e: Expression, name: String): Int = e match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(s"$name must be an int literal, got $other")
-        }
         WinnowExpr(args.head, intArg(args(1), "k"), intArg(args(2), "w"))
       }))
     ext.injectFunction((
@@ -173,11 +167,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[CharNgrams].getName, "char_ngrams"),
       (args: Seq[Expression]) => {
         require(args.length == 2, "char_ngrams(text, n)")
-        val n = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(s"n must be an int literal, got $other")
-        }
-        CharNgrams(args.head, n)
+        CharNgrams(args.head, intArg(args(1), "n"))
       }))
     ext.injectFunction((
       new FunctionIdentifier("langid_heuristic"),

@@ -10,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native distinct word n-grams: lowercase/trim -> whitespace tokens ->
   * n-grams (first-occurrence order) in ONE loop per row.
   *
-  * Bit-identical to the declarative formulation in
-  * [[graft.pipeline.Dedup.wordNgrams]] (lower -> split(trim, "\s+") ->
+  * Bit-identical to the declarative built-in formulation
+  * (lower -> split(trim, "\s+") ->
   * transform(sequence(...), slice+concat_ws) -> array_distinct) and
   * therefore to the DuckDB oracles built on the same construction. The
   * declarative version evaluates an interpreted lambda per gram with an

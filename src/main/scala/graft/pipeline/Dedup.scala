@@ -11,8 +11,11 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** MinHash hash family. ONE md5 per shingle produces a 61-bit base hash;
-    * the family is derived by 2-universal modular arithmetic
+  private val bridge = org.apache.spark.sql.graft.GraftSqlBridge
+
+  /** MinHash hash family. ONE md5 per shingle s produces a 61-bit base
+    * hash h = int(md5(s)[0:15 hex]) mod (2^61−1); the family is derived by
+    * 2-universal modular arithmetic
     * h_i = (a_i·(h>>31) + b_i·(h&(2^31−1)) + c_i) mod (2^61−1) — every
     * intermediate stays < 2^62, so the identical expression is exact (no
     * overflow) in Spark longs AND DuckDB BIGINTs (which would error on
@@ -25,15 +28,6 @@ object Dedup {
   def hashA(i: Int): Long = (((1103515245L * (i + 1) + 12345) >>> 3) & 0x3FFFFFFFL) | 1L
   def hashB(i: Int): Long = (((69069L * (i + 7) + 362437) >>> 2) & 0x3FFFFFFFL) | 1L
   def hashC(i: Int): Long = ((2654435761L * (i + 13)) >>> 4) & 0x3FFFFFFFL
-
-  /** 61-bit base hash of a string: int(md5(s)[0:15 hex]) mod (2^61−1). */
-  def baseHash(s: Column): Column =
-    pmod(conv(substring(md5(s), 1, 15), 16, 10).cast("long"), lit(MinhashMod))
-
-  /** Family member i applied to a base-hash column. */
-  def familyHash(i: Int, h: Column): Column =
-    pmod(lit(hashA(i)) * shiftright(h, 31) +
-      lit(hashB(i)) * h.bitwiseAND(lit(0x7FFFFFFFL)) + lit(hashC(i)), lit(MinhashMod))
 
   /** Exact dedup: keep the smallest id per normalized-text fingerprint.
     * Returns (id, fingerprint, is_canonical, dup_count).
@@ -127,45 +121,20 @@ object Dedup {
     ))
   }
 
-  /** Word n-grams of the text (n consecutive tokens joined one space,
-    * distinct, first-occurrence order). Fast path: the native `word_ngrams`
-    * expression (one loop per row — functions.WordNgrams) when the session
-    * carries GraftExtensions; identical output via built-ins otherwise.
+  /** Word n-grams of the text (n consecutive lowercased whitespace tokens
+    * joined by one space, distinct, first-occurrence order): the native
+    * one-loop [[graft.functions.WordNgrams]].
     */
-  def wordNgrams(text: Column, n: Int = 3): Column = {
-    val active = org.apache.spark.sql.SparkSession.getActiveSession
-    if (active.exists(_.catalog.functionExists("word_ngrams")))
-      call_function("word_ngrams", text, lit(n))
-    else {
-      val toks = TextOps.tokens(lower(text))
-      array_distinct(transform(
-        sequence(lit(0), greatest(size(toks) - n, lit(0))),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))
-      ))
-    }
-  }
+  def wordNgrams(text: Column, n: Int = 3): Column =
+    bridge.column(graft.functions.WordNgrams(bridge.expression(text), n))
 
-  /** MinHash signature (numHashes values) over word n-gram shingles.
-    *
-    * Fast path: the native `minhash_signature` expression (one tight JVM
-    * loop per row — see functions.MinhashSig) when the session carries
-    * GraftExtensions; identical output otherwise via built-ins (base hashes
-    * computed once per shingle, family members pure integer arithmetic —
-    * but each higher-order-function step is interpreted per element).
+  /** MinHash signature (numHashes values) over word n-gram shingles: the
+    * native [[graft.functions.MinhashSig]] — one md5 base hash per shingle,
+    * the family members by the integer arithmetic above, in one JVM loop
+    * per row.
     */
-  def minhashSignature(text: Column, numHashes: Int = 16, n: Int = 3): Column = {
-    val active = org.apache.spark.sql.SparkSession.getActiveSession
-    if (active.exists(_.catalog.functionExists("minhash_signature")))
-      call_function("minhash_signature", text, lit(numHashes), lit(n))
-    else
-      minhashFromBases(transform(wordNgrams(text, n), s => baseHash(s)), numHashes)
-  }
-
-  /** Signature from a precomputed base-hash array (materialize the bases
-    * column first when composing multi-step pipelines).
-    */
-  def minhashFromBases(bases: Column, numHashes: Int): Column =
-    array((0 until numHashes).map(i => array_min(transform(bases, h => familyHash(i, h)))): _*)
+  def minhashSignature(text: Column, numHashes: Int = 16, n: Int = 3): Column =
+    bridge.column(graft.functions.MinhashSig(bridge.expression(text), numHashes, n))
 
   /** LSH candidate pairs: signatures split into `bands` bands; documents
     * sharing any band bucket become a candidate pair (id1 < id2).
@@ -210,7 +179,6 @@ object Dedup {
     // array suffix once per element — O(k²) interpreted-lambda copies per
     // bucket, ~0.75 s of q_simhash_pairs' 0.96 s at sf0.1; bit-identical
     // output order, pinned by PipelineSpec)
-    val bridge = org.apache.spark.sql.graft.GraftSqlBridge
     def pairStructs(ids: Column): Column =
       bridge.column(graft.functions.IdPairs(bridge.expression(ids)))
     if (maxBucketSize == Int.MaxValue) {
@@ -521,23 +489,11 @@ object Dedup {
   }
 
   /** 32-bit SimHash over tokens: bit b is 1 iff the weighted sum of token
-    * hash bits at position b is positive. Uses the native one-pass
-    * [[graft.functions.SimhashExpr]] when the session carries
-    * GraftExtensions (bit-identical; the HOF fallback re-traverses the
-    * token array once per BIT with an interpreted lambda — ~30x slower).
+    * hash bits at position b is positive. Native one-pass
+    * [[graft.functions.SimhashExpr]].
     */
-  def simhash(text: Column, bits: Int = 32): Column = {
-    val active = org.apache.spark.sql.SparkSession.getActiveSession
-    if (active.exists(_.catalog.functionExists("simhash")))
-      return call_function("simhash", text, lit(bits))
-    val tokenHashes = transform(TextOps.tokens(lower(text)), t =>
-      conv(substring(md5(t), 1, 15), 16, 10).cast("long"))
-    (0 until bits).map { b =>
-      val bitSum = aggregate(tokenHashes, lit(0L),
-        (acc, th) => acc + when(shiftright(th, b).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-      when(bitSum > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-  }
+  def simhash(text: Column, bits: Int = 32): Column =
+    bridge.column(graft.functions.SimhashExpr(bridge.expression(text), bits))
 
   /** Hamming distance between two simhash values. */
   def hamming(a: Column, b: Column): Column =
@@ -558,7 +514,6 @@ object Dedup {
     */
   def winnowFingerprints(df: DataFrame, idCol: String, textCol: String,
                          k: Int = 20, w: Int = 8): DataFrame = {
-    val bridge = org.apache.spark.sql.graft.GraftSqlBridge
     val fp = bridge.column(graft.functions.WinnowExpr(bridge.expression(col(textCol)), k, w))
     df.select(col(idCol), explode(fp).as("__f"))
       .select(col(idCol), col("__f.pos").as("pos"), col("__f.hash").as("hash"))

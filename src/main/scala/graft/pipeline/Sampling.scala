@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   *
   * Every operator here is driven by one portable primitive, [[hashU]]: a
   * uniform deterministic pseudo-random in [0,1) derived from md5 of
-  * (seed, id) — the same construction as Dedup.baseHash, computable
+  * (seed, id) — the integer of md5's first 15 hex digits scaled by 2^-60,
+  * the same md5 prefix the MinHash base hash reads, computable
   * bit-identically in any engine with md5 (the DuckDB oracles mirror it
   * exactly), so samples are reproducible across engines, runs, and
   * cluster sizes. No `rand()` anywhere: Spark's rand is partition-layout

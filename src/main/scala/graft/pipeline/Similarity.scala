@@ -11,21 +11,17 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Dot product: uses the native codegen'd `vec_dot` expression when the
-    * session was built with GraftExtensions; falls back to the pure-built-in
-    * higher-order-function formulation otherwise. For equal-length arrays
-    * with no null elements (every embedding column in this library) the two
-    * agree exactly — same left-to-right double accumulation. Degenerate
-    * inputs differ: the HOF path yields NULL on length mismatch or null
-    * elements, vec_dot truncates to the shorter array and counts null
-    * elements as 0 (see VecDot's doc).
+  private val bridge = org.apache.spark.sql.graft.GraftSqlBridge
+
+  /** Dot product: the native codegen'd [[graft.functions.VecDot]]
+    * (`vec_dot`), one primitive left-to-right double accumulation per row.
+    * Degenerate inputs are total: mismatched lengths truncate to the
+    * shorter array and null elements count as 0 (a declarative
+    * `aggregate(zip_with(...))` would yield NULL for both). NULL arrays
+    * give NULL.
     */
-  def dot(a: Column, b: Column): Column = {
-    val active = org.apache.spark.sql.SparkSession.getActiveSession
-    if (active.exists(_.catalog.functionExists("vec_dot"))) call_function("vec_dot", a, b)
-    else aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-  }
+  def dot(a: Column, b: Column): Column =
+    bridge.column(graft.functions.VecDot(bridge.expression(a), bridge.expression(b)))
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -149,27 +145,13 @@ object Similarity {
     * query side never touches the driver, and the corpus-scale
     * k ≈ √N ≈ 1000 guideline stays cheap where the built-in formulation
     * (k·dim literal nodes + a per-row k-struct array_sort) chokes the
-    * analyzer and pays O(k log k) interpreted work per row. Needs no
-    * session extension (carries non-literal state; constructed directly).
-    * Bit-identical to [[probeClustersBuiltin]] — pinned by
-    * IvfProbeSpec.
+    * analyzer and pays O(k log k) interpreted work per row.
+    * Bit-identical to the built-in formulation (per-centroid dot products,
+    * array_sort on (−sim, idx) structs) — pinned by IvfProbeSpec.
     */
   def probeClusters(vec: Column, cents: Array[Array[Double]], nProbe: Int): Column = {
-    val bridge = org.apache.spark.sql.graft.GraftSqlBridge
     bridge.column(graft.functions.IvfProbe(bridge.expression(vec),
       cents.flatten, cents.length, cents(0).length, nProbe))
-  }
-
-  /** Pure-built-in probe formulation (per-centroid dot products, array_sort
-    * on (−sim, idx) structs) — the parity oracle for [[probeClusters]];
-    * viable only at small centroid counts.
-    */
-  def probeClustersBuiltin(vec: Column, cents: Array[Array[Double]], nProbe: Int): Column = {
-    val entries = array(cents.zipWithIndex.map { case (c, i) =>
-      val sim = dot(vec, array(c.map(lit): _*))
-      struct((-sim).as("negsim"), lit(i).as("idx"))
-    }: _*)
-    transform(slice(array_sort(entries), 1, nProbe), e => e.getField("idx"))
   }
 
   /** IVF search: probe the `nProbe` centroids nearest to each query and do
@@ -320,7 +302,6 @@ object Similarity {
       case _ => false
     }
     if (maxClusterSize == Int.MaxValue && integralId) {
-      val bridge = org.apache.spark.sql.graft.GraftSqlBridge
       val nParts = corpus.sparkSession.sessionState.conf.numShufflePartitions
       val probed = corpus.select(col(idCol).as("__id"), col(vecCol).as("__v"),
         norm(col(vecCol)).as("__norm"), probe(col(vecCol)).as("__ps"))
@@ -411,7 +392,6 @@ object Similarity {
     */
   def probeClustersTwoLevel(vec: Column, tlc: TwoLevelCentroids,
                             nProbeCoarse: Int, nProbe: Int): Column = {
-    val bridge = org.apache.spark.sql.graft.GraftSqlBridge
     bridge.column(graft.functions.IvfProbe2(bridge.expression(vec),
       tlc.coarse.flatten, tlc.fineFlat.flatten, tlc.k1, tlc.k2, tlc.dim,
       nProbeCoarse, nProbe))
@@ -449,7 +429,6 @@ object Similarity {
     * longer than `dim` truncate, shorter use the overlap.
     */
   def srpSketch(vec: Column, bits: Int = 48, dim: Int = 64, seed: Int = 7): Column = {
-    val bridge = org.apache.spark.sql.graft.GraftSqlBridge
     bridge.column(graft.functions.SrpSketch(bridge.expression(vec), bits, dim, seed))
   }
 
@@ -477,7 +456,6 @@ object Similarity {
     * regimes). Decorrelated from [[srpSketch]]'s planes at equal seeds.
     */
   def rpProject(vec: Column, outDim: Int = 16, dim: Int = 64, seed: Int = 7): Column = {
-    val bridge = org.apache.spark.sql.graft.GraftSqlBridge
     bridge.column(graft.functions.RpProject(bridge.expression(vec), outDim, dim, seed))
   }
 

