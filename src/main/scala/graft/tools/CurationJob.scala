@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ckpt.Checkpoint
@@ -47,15 +47,7 @@ object CurationJob {
     val outDir = args(1)
     val nBuckets = if (args.length > 2) args(2).toInt else 64
     val seqLen = if (args.length > 3) args(3).toInt else 128
-    val builder = SparkSession.builder()
-      .appName("graft-curation-job")
-      .config("spark.sql.session.timeZone", "UTC")
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master("local[*]")
-                   .config("spark.sql.shuffle.partitions",
-                     Runtime.getRuntime.availableProcessors.toString)
-                   .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.job("graft-curation-job")
     val docs = spark.read.parquet(input)
     val manifests = run(docs, outDir, nBuckets, seqLen, lineageInput = input)
     println(s"""{"buckets":$nBuckets,"rows":${manifests.map(_.rows).sum},"outDir":"$outDir"}""")

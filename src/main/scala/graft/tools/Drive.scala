@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.time.{PointInTime, TranscriptGen}
@@ -11,15 +10,7 @@ import graft.time.{PointInTime, TranscriptGen}
   */
 object Drive {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-drive")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(4, 4, "spark.sql.extensions" -> "graft.functions.GraftExtensions")
 
     val t = TranscriptGen.generate(spark, 200, 20, 42)
     println("TURNS=" + t.count())
@@ -217,12 +208,9 @@ object Drive {
       }.toDF((0 until 7).map(i => s"c$i") :+ "target": _*).cache()
       df3.count()
       val cols = (0 until 7).map(i => s"c$i")
-      val t1 = System.nanoTime()
-      val s1 = FeatSel.selectFeatures(df3, cols, "target", FeatSel.Config(nJobs = 1))
-      val t2 = System.nanoTime()
-      val s5 = FeatSel.selectFeatures(df3, cols, "target", FeatSel.Config(nJobs = 5))
-      val t3 = System.nanoTime()
-      println(f"NJOBS_EQ=${s1 == s5} sel=${s1.mkString(",")} seq=${(t2 - t1) / 1e9}%.2fs par=${(t3 - t2) / 1e9}%.2fs")
+      val (s1, seq) = graft.Bench.timed(FeatSel.selectFeatures(df3, cols, "target", FeatSel.Config(nJobs = 1)))
+      val (s5, par) = graft.Bench.timed(FeatSel.selectFeatures(df3, cols, "target", FeatSel.Config(nJobs = 5)))
+      println(f"NJOBS_EQ=${s1 == s5} sel=${s1.mkString(",")} seq=$seq%.2fs par=$par%.2fs")
     }
     // round 3: IVF mega-cluster cap — degenerate corpus (everything one
     // cluster), tiny cap: pairs must be the linear hub star, not C(n,2)
@@ -247,11 +235,8 @@ object Drive {
       val cents = Array.fill(256)(Array.fill(16)(rng.nextGaussian())).map { v =>
         val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n)
       }
-      def time(c: org.apache.spark.sql.Column): Double = {
-        val t0 = System.nanoTime()
-        e.select(sum(element_at(c, 1))).collect()
-        (System.nanoTime() - t0) / 1e9
-      }
+      def time(c: org.apache.spark.sql.Column): Double =
+        graft.Bench.timed(e.select(sum(element_at(c, 1))).collect())._2
       val warm = time(Similarity.probeClusters(col("embedding"), cents, 4))
       val tn = time(Similarity.probeClusters(col("embedding"), cents, 4))
       println(f"IVF_PROBE_K256 native=$tn%.2fs (warm=$warm%.2fs)")
@@ -351,7 +336,7 @@ object Drive {
       println("ASOF_MILLIS=" + Tables.readAsOf(spark, p, 2000L).count() + " (expect 1)")
     }
     // round 4: multi-class softmax + LARS + frontier CC + right-heavy as-of
-    // + two-level IVF + BPE + streaming near-dup batch fallback
+    // + two-level IVF + streaming near-dup batch fallback
     {
       import spark.implicits._
       // 3-class end-to-end through AutoFeat
@@ -412,12 +397,6 @@ object Drive {
       val tw = vecs.select(Similarity.probeClustersTwoLevel(col("embedding"), tlc, 2, 1)(0).as("c"))
         .groupBy("c").count().orderBy("c").collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq
       println(s"TWOLEVEL_IVF flat=$fl two=$tw equal=${fl == tw}")
-      // BPE count + empty-text probe
-      import graft.pipeline.BpeModel
-      val bpe = BpeModel.loadFile("src/test/resources/fixtures/bpe_merges.txt")
-      val bc = Seq("the quick brown fox", "", "zzz qqq").toDF("text")
-        .select(BpeModel.countCol(col("text"), bpe).as("n")).collect().map(_.getInt(0)).toSeq
-      println(s"BPE_COUNTS=$bc (expect head 8, then 0)")
       // streaming as-of (batch execution) vs the batch join
       import graft.time.StreamingAsOf
       val sLeft = Seq(("c", new java.sql.Timestamp(5000)), ("c", new java.sql.Timestamp(15000)))
@@ -616,18 +595,6 @@ object Drive {
       // hostile: empty corpus and sub-k docs -> pass-through, no crash
       println("WINNOW_EMPTY=" + graft.pipeline.Dedup.substringDedup(
         wdocs.limit(0), "doc_id", "text").count())
-      // BPE encode -> packed input_ids: the text-to-training-sequences path
-      val bpeEnc = new graft.pipeline.BpeEncoder(
-        graft.pipeline.BpeModel.loadFile("src/test/resources/fixtures/bpe_merges.txt"),
-        graft.pipeline.BpeModel.loadVocabFile("src/test/resources/fixtures/bpe_vocab.txt"))
-      val encDocs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .withColumn("ids", graft.pipeline.BpeModel.encodeCol(col("text"), bpeEnc))
-      val seqs = graft.pipeline.Pack.packSequences(encDocs, "doc_id", "ids", 256, 4)
-      val sAgg = seqs.agg(count(lit(1)), sum("n_tokens"),
-        sum(when(col("n_tokens") === 256, 1).otherwise(0))).collect()(0)
-      val directToks = encDocs.select(sum(size(col("ids")))).collect()(0).getLong(0)
-      println(s"PACK_IDS seqs=${sAgg.getLong(0)} tokens=${sAgg.getLong(1)} full=${sAgg.getLong(2)}" +
-        s" conserve=${sAgg.getLong(1) == directToks} (expect conserve=true, full=seqs-4..seqs)")
       println("WINNOW_TINY=" + graft.pipeline.Dedup.substringDedup(
         Seq((1L, "tiny"), (2L, "  ALSO   tiny  ")).toDF("doc_id", "text"),
         "doc_id", "text").orderBy("doc_id").collect()

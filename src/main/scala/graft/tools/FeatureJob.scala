@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ckpt.Checkpoint
@@ -22,16 +21,7 @@ object FeatureJob {
     val input = args(0)
     val outDir = args(1)
     val nBuckets = if (args.length > 2) args(2).toInt else 64
-    val builder = SparkSession.builder()
-      .appName("graft-feature-job")
-      .config("spark.sql.session.timeZone", "UTC")
-    // master comes from spark-submit on a cluster; default local for dev
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master("local[*]")
-                   .config("spark.sql.shuffle.partitions",
-                     Runtime.getRuntime.availableProcessors.toString)
-                   .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.job("graft-feature-job")
 
     val turns =
       if (input.startsWith("gen:")) TranscriptGen.generate(spark, input.drop(4).toLong).toDF()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Bench
 
 /** Two-parallelism scaling evidence (BASELINE.json north rule: throughput
@@ -18,22 +16,14 @@ object ScalingBench {
     * one master can exist per JVM, so levels alternate via stop/start).
     */
   private def run(cores: Int, sfDir: String, nConvs: Long, nFormulas: Int): (Long, Double) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      // FIXED partition count at every parallelism level: on a real cluster
-      // you add executors to the same job — the plan (and so the work) must
-      // be identical between N and 4N, only the concurrency differs.
-      // 128 (not 32): partitions must stay >> max cores or wave
-      // quantization dominates — at 32 partitions/16 cores a job is 2
-      // scheduler waves and ONE straggler partition adds 50% wall-clock,
-      // which measured as fake scaling loss (pair efficiencies 0.58-0.86)
-      .config("spark.sql.shuffle.partitions", "128")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // FIXED partition count at every parallelism level: on a real cluster
+    // you add executors to the same job — the plan (and so the work) must
+    // be identical between N and 4N, only the concurrency differs.
+    // 128 (not 32): partitions must stay >> max cores or wave
+    // quantization dominates — at 32 partitions/16 cores a job is 2
+    // scheduler waves and ONE straggler partition adds 50% wall-clock,
+    // which measured as fake scaling loss (pair efficiencies 0.58-0.86)
+    val spark = Sessions.local(cores, 128)
     val turns = Bench.benchTranscripts(spark, sfDir, nConvs)
     Bench.transcriptPipeline(spark, turns, nFormulas) // warm-up
     val ((n, _), sec) = Bench.timed(Bench.transcriptPipeline(spark, turns, nFormulas))

@@ -36,10 +36,12 @@ class BpeSpec extends SparkSpec {
     golden.foreach { case (text, n, _) =>
       assert(got(text) == n, s"'$text': ${got(text)} vs $n")
     }
-    // null text counts 0 through the expression's null handling (stays null)
-    val nullRow = Seq[Option[String]](None).toDF("text")
-      .select(BpeModel.countCol(col("text"), model).as("n")).collect()(0)
-    assert(nullRow.isNullAt(0))
+    // empty text counts 0; null text stays null through the expression's
+    // null handling
+    val edge = Seq[Option[String]](Some(""), None).toDF("text")
+      .select(BpeModel.countCol(col("text"), model).as("n")).collect()
+    assert(edge(0).getInt(0) == 0)
+    assert(edge(1).isNullAt(0))
   }
 
   lazy val encoder: BpeEncoder =
