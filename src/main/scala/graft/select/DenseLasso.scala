@@ -1,15 +1,5 @@
 package graft.select
 
-/** Cross-validated L1 fit over a column subset — implemented by the
-  * distributed-Gram solver ([[GramLasso]]) and the dense driver solver
-  * ([[DenseLasso]]); the selection control flow is solver-agnostic.
-  */
-trait CvLasso {
-  def cvFit(idx: Array[Int]): LassoFit
-}
-
-final case class LassoFit(coef: Array[Double], intercept: Double, alpha: Double)
-
 /** Driver-side CV Lasso by coordinate descent directly on a collected
   * column block — the d >> n selection regime.
   *
@@ -23,10 +13,8 @@ final case class LassoFit(coef: Array[Double], intercept: Double, alpha: Double)
   * subsample block once per run and solves every fit in this class;
   * the 10^12-row table is never touched by selection either way.
   *
-  * Semantics mirror GramLasso exactly: weighted centering, geometric λ path
-  * from λ_max, per-fold warm-started CD with active-set + KKT sweeps,
-  * LARS-style active-set cap, held-out (weighted) MSE model selection,
-  * final refit on all rows.
+  * The path, CV and refit are [[LassoPath]]'s, shared with GramLasso; this
+  * class supplies weighted centering over row sets and a residual view.
   *
   * Data layout: column-major x(j)(i); weights default to 1 (regression) or
   * IRLS class weights (classification quadratic).
@@ -36,209 +24,68 @@ final class DenseLasso(x: Array[Array[Double]], y: Array[Double],
   private val n = y.length
   require(x.forall(_.length == n) && w.length == n && foldOf.length == n)
 
-  override def cvFit(idx: Array[Int]): LassoFit = cvFit(idx, 60, 1e-3, 300)
-
-  /** Centered + sqrt(w)-scaled copies of (x(idx), y) over `rows`; returns
-    * (xc, zc, mu, muY, sumW).
-    */
-  private def centered(idx: Array[Int], rows: Array[Int])
-  : (Array[Array[Double]], Array[Double], Array[Double], Double, Double) = {
-    val m = rows.length
-    var sumW = 0.0
-    var i = 0
-    while (i < m) { sumW += w(rows(i)); i += 1 }
-    val mu = new Array[Double](idx.length)
-    var muY = 0.0
-    var j = 0
-    while (j < idx.length) {
-      val xj = x(idx(j))
-      var s = 0.0
-      i = 0
-      while (i < m) { s += w(rows(i)) * xj(rows(i)); i += 1 }
-      mu(j) = s / sumW
-      j += 1
-    }
-    i = 0
-    while (i < m) { muY += w(rows(i)) * y(rows(i)); i += 1 }
-    muY /= sumW
-    val xc = Array.ofDim[Double](idx.length, m)
-    val zc = new Array[Double](m)
-    i = 0
-    while (i < m) {
-      val sw = math.sqrt(w(rows(i)))
-      zc(i) = sw * (y(rows(i)) - muY)
-      var jj = 0
-      while (jj < idx.length) { xc(jj)(i) = sw * (x(idx(jj))(rows(i)) - mu(jj)); jj += 1 }
-      i += 1
-    }
-    (xc, zc, mu, muY, sumW)
-  }
-
-  /** CD at one λ; r must equal zc − XC·beta on entry and is kept in sync. */
-  private def cd(xc: Array[Array[Double]], norms: Array[Double], sumW: Double,
-                 lambda: Double, beta: Array[Double], r: Array[Double],
-                 maxIter: Int = 200, tol: Double = 1e-6): Unit = {
-    val d = xc.length
-    val m = r.length
-    val active = new java.util.BitSet(d)
-    var j = 0
-    while (j < d) { if (beta(j) != 0.0) active.set(j); j += 1 }
-
-    def updateCoord(j: Int): Double = {
-      val gjj = norms(j)
-      if (gjj <= 0) return 0.0
-      val xj = xc(j)
-      var dotRX = 0.0
-      var i = 0
-      while (i < m) { dotRX += xj(i) * r(i); i += 1 }
-      val rhoJ = dotRX / sumW + gjj * beta(j)
-      val bNew =
-        if (rhoJ > lambda) (rhoJ - lambda) / gjj
-        else if (rhoJ < -lambda) (rhoJ + lambda) / gjj
-        else 0.0
-      val diff = bNew - beta(j)
-      if (diff != 0.0) {
-        i = 0
-        while (i < m) { r(i) -= xj(i) * diff; i += 1 }
-        beta(j) = bNew
-      }
-      math.abs(diff) * math.sqrt(gjj)
-    }
-
-    var outer = 0
-    var done = false
-    while (!done && outer < 100) {
-      outer += 1
-      var it = 0
-      var maxDelta = Double.MaxValue
-      while (it < maxIter && maxDelta > tol) {
-        maxDelta = 0.0
-        var jj = active.nextSetBit(0)
-        while (jj >= 0) {
-          val delta = updateCoord(jj)
-          if (delta > maxDelta) maxDelta = delta
-          if (beta(jj) == 0.0) active.clear(jj)
-          jj = active.nextSetBit(jj + 1)
-        }
-        it += 1
-      }
-      // KKT scan over inactive coordinates: |x_j' r| / sumW > lambda
-      done = true
-      j = 0
-      while (j < d) {
-        if (beta(j) == 0.0) {
-          val xj = xc(j)
-          var s = 0.0
-          var i = 0
-          while (i < m) { s += xj(i) * r(i); i += 1 }
-          if (math.abs(s / sumW) > lambda + 1e-12) { active.set(j); done = false }
-        }
-        j += 1
-      }
-    }
-  }
-
-  def cvFit(idx: Array[Int], nAlphas: Int, eps: Double, maxActive: Int): LassoFit = {
-    val d = idx.length
-    require(d > 0, "empty column subset")
-    val activeCap = math.min(math.min(n - 1, d), maxActive)
+  override def cvFit(idx: Array[Int]): LassoFit = {
     val allRows = Array.range(0, n)
-    // λ path from full training data: λ_max = max_j |<x_j - μ, z - μ>_w| / Σw
-    val alphas: Array[Double] = {
-      val (xc, zc, _, _, sumW) = centered(idx, allRows)
-      var mx = 1e-12
-      var j = 0
-      while (j < d) {
-        var s = 0.0
-        var i = 0
-        while (i < n) { s += xc(j)(i) * zc(i); i += 1 }
-        val a = math.abs(s / sumW)
-        if (a > mx) mx = a
-        j += 1
-      }
-      (0 until nAlphas).map(i => mx * math.pow(eps, i.toDouble / (nAlphas - 1))).toArray
-    }
+    LassoPath.cvFit(idx.length, n, k, new Residual(idx, allRows, allRows), { f =>
+      val trainRows = allRows.filter(foldOf(_) != f)
+      val testRows = allRows.filter(foldOf(_) == f)
+      if (testRows.isEmpty || trainRows.length <= 1) None
+      else Some(new Residual(idx, trainRows, testRows))
+    })
+  }
 
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val perFold: Seq[(Array[Double], Int)] = Await.result(Future.traverse((0 until k).toList) { f =>
-      Future {
-        val trainRows = allRows.filter(foldOf(_) != f)
-        val testRows = allRows.filter(foldOf(_) == f)
-        if (testRows.isEmpty || trainRows.length <= 1) (Array.fill(nAlphas)(Double.NaN), nAlphas)
-        else {
-          val (xc, zc, mu, muY, sumW) = centered(idx, trainRows)
-          val norms = xc.map { xj =>
-            var s = 0.0; var i = 0
-            while (i < xj.length) { s += xj(i) * xj(i); i += 1 }
-            s / sumW
-          }
-          val beta = new Array[Double](d)
-          val r = zc.clone()
-          val mse = new Array[Double](nAlphas)
-          var truncAt = nAlphas
-          var a = 0
-          while (a < nAlphas && truncAt == nAlphas) {
-            cd(xc, norms, sumW, alphas(a), beta, r)
-            var nAct = 0
-            var j = 0
-            while (j < d) { if (beta(j) != 0.0) nAct += 1; j += 1 }
-            if (nAct > activeCap) truncAt = a
-            else {
-              // held-out weighted MSE with intercept from train means
-              val b0 = muY - {
-                var s = 0.0; var jj = 0
-                while (jj < d) { s += mu(jj) * beta(jj); jj += 1 }
-                s
-              }
-              var se = 0.0
-              var sw = 0.0
-              testRows.foreach { i =>
-                var p = b0
-                var jj = 0
-                while (jj < d) { p += x(idx(jj))(i) * beta(jj); jj += 1 }
-                val e = y(i) - p
-                se += w(i) * e * e
-                sw += w(i)
-              }
-              mse(a) = if (sw > 0) se / sw else Double.NaN
-              a += 1
-            }
-          }
-          (mse, truncAt)
-        }
+  /** Naive-form view over `rows`: centered + sqrt(w)-scaled copies of
+    * (x(idx), y) and the residual r = zc − XC·β, with correlations read as
+    * ⟨x_j, r⟩/Σw. Scores on the raw `testRows` (weighted MSE).
+    */
+  private final class Residual(idx: Array[Int], rows: Array[Int], testRows: Array[Int])
+      extends LassoPath.View {
+    private val d = idx.length
+    private val m = rows.length
+    private val sumW = rows.foldLeft(0.0)((s, i) => s + w(i))
+    private val mu = idx.map { c => rows.foldLeft(0.0)((s, i) => s + w(i) * x(c)(i)) / sumW }
+    private val muY = rows.foldLeft(0.0)((s, i) => s + w(i) * y(i)) / sumW
+    private val xc = Array.ofDim[Double](d, m)
+    private val r = new Array[Double](m)
+    locally {
+      var i = 0
+      while (i < m) {
+        val sw = math.sqrt(w(rows(i)))
+        r(i) = sw * (y(rows(i)) - muY)
+        var jj = 0
+        while (jj < d) { xc(jj)(i) = sw * (x(idx(jj))(rows(i)) - mu(jj)); jj += 1 }
+        i += 1
       }
-    }, Duration.Inf)
-
-    val usable = perFold.map(_._2).min
-    var best = 0
-    var bestMse = Double.MaxValue
-    var a = 0
-    while (a < math.max(usable, 1)) {
-      val ms = perFold.map(_._1(a)).filter(!_.isNaN)
-      if (ms.nonEmpty) {
-        val m = ms.sum / ms.size
-        if (m < bestMse - 1e-15) { bestMse = m; best = a }
-      }
-      a += 1
     }
-    // refit on all rows at selected λ (warm path down)
-    val (xc, zc, mu, muY, sumW) = centered(idx, allRows)
-    val norms = xc.map { xj =>
-      var s = 0.0; var i = 0
-      while (i < xj.length) { s += xj(i) * xj(i); i += 1 }
+    private val norms = xc.map(_.foldLeft(0.0)((s, v) => s + v * v) / sumW)
+
+    def norm(j: Int): Double = norms(j)
+    def corr(j: Int): Double = {
+      val xj = xc(j)
+      var s = 0.0
+      var i = 0
+      while (i < m) { s += xj(i) * r(i); i += 1 }
       s / sumW
     }
-    val beta = new Array[Double](d)
-    val r = zc.clone()
-    a = 0
-    while (a <= best) { cd(xc, norms, sumW, alphas(a), beta, r); a += 1 }
-    val b0 = muY - {
-      var s = 0.0; var jj = 0
-      while (jj < d) { s += mu(jj) * beta(jj); jj += 1 }
-      s
+    def shift(j: Int, diff: Double): Unit = {
+      val xj = xc(j)
+      var i = 0
+      while (i < m) { r(i) -= xj(i) * diff; i += 1 }
     }
-    LassoFit(beta, b0, alphas(best))
+    def mse(beta: Array[Double]): Double = {
+      val b0 = intercept(beta)
+      var se = 0.0
+      var sw = 0.0
+      testRows.foreach { i =>
+        var p = b0
+        var jj = 0
+        while (jj < d) { p += x(idx(jj))(i) * beta(jj); jj += 1 }
+        val e = y(i) - p
+        se += w(i) * e * e
+        sw += w(i)
+      }
+      if (sw > 0) se / sw else Double.NaN
+    }
+    def intercept(beta: Array[Double]): Double = muY - GramOps.dot(mu, beta)
   }
 }

@@ -19,8 +19,9 @@ import graft.stats.{Gram, Scaling}
   * scans, noise filters) is then a driver-side coordinate-descent on Gram
   * submatrices (GramLasso). Two more Gram passes on the full scaled frame
   * serve the correlation filter and the final noise filter. So a full
-  * 5-run selection costs ~7 tree-reduced jobs over the (admission-bounded)
-  * subsample — the 10^12-row table is never touched here.
+  * 5-run selection costs ~7 ordered-reduce jobs over the (admission-bounded)
+  * subsample — the 10^12-row table is never touched here. Wider frames
+  * leave the Gram path (see [[gramMaxCols]] for the three regimes).
   *
   * Documented deviations from the reference (SURVEY.md §7.4.3): our own RNG
   * (not numpy MT19937); the shuffled-noise copy permutes whole ROWS of the
@@ -174,50 +175,23 @@ object FeatSel {
     }
   }
 
-  /** Column-count threshold between the two solver regimes: below it, fold
-    * Grams (folds·d²/2 doubles of sufficient statistics, one treeAggregate)
-    * are cheap and selection never re-touches the rows; above it, d² beats
-    * the raw n·d block of the admission-bounded subsample itself, so the
-    * block is collected once and all fits run dense on the driver — the
-    * same bytes model (rows·cols·4 <= max_gb) the reference holds in RAM.
+  /** Column-count bound of the fold-Gram solver. Fold Grams cost
+    * folds·d²/2 doubles of sufficient statistics (one ordered-reduce pass,
+    * stats.DetReduce) and never re-touch the rows; past this many columns
+    * d² outgrows the raw n·d block of the admission-bounded subsample, which
+    * is then collected and fit dense on the driver — the same bytes model
+    * (rows·cols·4 <= max_gb) the reference holds in RAM. It splits selection
+    * into three regimes:
+    *  - fold Grams per run ([[runGrams]]), while a run's fit universe —
+    *    d features + d shuffled copies + max(3, d/2) Gaussian columns — has
+    *    at most 1200 columns, i.e. d <= 480;
+    *  - a per-run collect + [[DenseLasso]] ([[runGrams]]) for that universe
+    *    past 1200 columns (480 < d <= 1200); the final noise filter applies
+    *    the same test to the consolidated columns;
+    *  - the whole selection on the driver ([[selectFeaturesDense]]) once the
+    *    d features alone exceed 1200.
     */
   private val gramMaxCols = 1200
-
-  /** Proximal-Newton wrapper around a selection fit (classification only):
-    * round 0 is the base solver's one-step quadratic (expansion around
-    * beta = 0 — the precomputed run Grams); each extra round re-expands the
-    * balanced L1-logistic objective around the current coefficients
-    * (LogisticLasso's IRLS working response/weights) and recomputes the
-    * weighted fold Grams for JUST the fitted columns — one distributed pass
-    * over the persisted run frame per extra round, everything else
-    * driver-side CD.
-    */
-  private final class NewtonGramLasso(withFold: DataFrame, allCols: IndexedSeq[String],
-      zCol: String, cwCol: String, folds: Int, rounds: Int, base: CvLasso) extends CvLasso {
-    override def cvFit(idx: Array[Int]): LassoFit = {
-      var fit = base.cvFit(idx)
-      val cols = idx.map(allCols).toSeq
-      var r = 1
-      while (r < rounds) {
-        val margin = cols.zip(fit.coef).filter(_._2 != 0.0)
-          .foldLeft(lit(fit.intercept).cast("double")) { case (acc, (c, b)) =>
-            acc + q(c).cast("double") * lit(b)
-          }
-        // the frame's target holds the round-0 working response z0 = 4y - 2
-        val y = (q(zCol).cast("double") + lit(2.0)) / lit(4.0)
-        val p = lit(1.0) / (lit(1.0) + exp(-margin))
-        val pc = least(greatest(p, lit(1e-5)), lit(1.0 - 1e-5))
-        val w = q(cwCol).cast("double") * pc * (lit(1.0) - pc)
-        val z = margin + (y - pc) / (pc * (lit(1.0) - pc))
-        val sub = withFold.select(
-          Seq(col("__fold"), w.as("__nw"), z.as("__nz")) ++ cols.map(q): _*)
-        val grams = Gram.compute(sub, cols, Some("__nz"), Some("__fold"), folds, Some("__nw"))
-        fit = new GramLasso(grams).cvFit(cols.indices.toArray)
-        r += 1
-      }
-      fit
-    }
-  }
 
   /** Build the solver for one selection run's frame (already holding noise
     * columns). `weightCol` (classification) makes fits IRLS-weighted.
@@ -232,11 +206,26 @@ object FeatSel {
       if (all.size <= gramMaxCols) {
         val withFold = frame.withColumn("__fold", pmod(monotonically_increasing_id(), lit(folds)).cast("int"))
         val grams = Gram.compute(withFold, all, Some(targetCol), Some("__fold"), folds, weightCol)
-        val gl: CvLasso = if (lassoSolver == "lars") new GramLars(grams) else new GramLasso(grams)
+        val solverOf: Array[Gram] => CvLasso =
+          if (lassoSolver == "lars") new GramLars(_) else new GramLasso(_)
+        val base = solverOf(grams)
         weightCol match {
           case Some(cw) if newtonRounds > 1 =>
-            new NewtonGramLasso(withFold, all.toIndexedSeq, targetCol, cw, folds, newtonRounds, gl)
-          case _ => gl
+            // proximal-Newton rounds (classification): round 0 is the base
+            // fit's one-step quadratic around beta = 0 (the run Grams); each
+            // extra round re-expands around the current coefficients with
+            // one weighted Gram pass over JUST the fitted columns. The
+            // frame's target holds the round-0 working response z0 = 4y - 2.
+            val y = (q(targetCol).cast("double") + lit(2.0)) / lit(4.0)
+            val universe = all.toIndexedSeq
+            idx => {
+              val cols = idx.map(universe).toSeq
+              (1 until newtonRounds).foldLeft(base.cvFit(idx)) { (fit, _) =>
+                LogisticLasso.irlsRound(withFold, cols, fit, y, q(cw).cast("double"), col("__fold"),
+                  folds, solverOf)
+              }
+            }
+          case _ => base
         }
       } else {
         val wExpr = weightCol.map(q).getOrElse(lit(1.0))
@@ -305,6 +294,33 @@ object FeatSel {
       }
     }
     noiseFilter(rg, good.toVector.sorted)
+  }
+
+  /** Consolidates the runs' selections (featsel.py:249-271): columns ordered
+    * by vote count (longer names downweighted to break ties) after `keep`,
+    * then each candidate past the first (or past `keep`) is kept only when
+    * its |correlation| with EVERY prior candidate in that order is below
+    * 0.9. `corrOver(selected)` gives the pairwise correlation by position in
+    * `selected`; it is asked only when there is a candidate to filter. No
+    * votes at all keeps every feature.
+    */
+  private def consolidate(selectedLists: Seq[Seq[String]], featureCols: Seq[String], keep: Seq[String])
+                         (corrOver: Seq[String] => (Int, Int) => Double): Seq[String] = {
+    val flat = selectedLists.flatten
+    if (flat.isEmpty) return featureCols
+    val counts = flat.groupBy(identity).map { case (c, xs) => c -> xs.size }
+    var selected = counts.keys.toSeq.sortBy(c => -(counts(c) - 1e-6 * c.length))
+    selected = keep ++ selected.filterNot(keep.contains)
+    var good = if (keep.isEmpty) Seq(selected.head) else keep
+    val startK = good.size
+    if (selected.size > startK) {
+      val corr = corrOver(selected)
+      for (i <- startK until selected.size) {
+        val maxCorr = (0 until i).map(j => math.abs(corr(i, j))).max
+        if (maxCorr < 0.9) good = good :+ selected(i)
+      }
+    }
+    good
   }
 
   /** Reference `select_features` (featsel.py:179-286). Classification
@@ -392,26 +408,9 @@ object FeatSel {
       picked.map(featureCols)
     }
 
-    var goodCols: Seq[String] = featureCols
-    val flat = selectedLists.flatten
-    if (cfg.featselRuns >= 1 && flat.nonEmpty) {
-      val counts = flat.groupBy(identity).map { case (c, xs) => c -> xs.size }
-      // sort by vote frequency, longer names downweighted to break ties
-      var selected = counts.keys.toSeq.sortBy(c => -(counts(c) - 1e-6 * c.length))
-      selected = keep ++ selected.filterNot(keep.contains)
-      var good = if (keep.isEmpty) Seq(selected.head) else keep
-      val startK = good.size
-      if (selected.size > startK) {
-        // correlation filter vs ALL prior candidates in vote order
-        val g = Gram.compute(scaled, selected)(0)
-        val pos = selected.zipWithIndex.toMap
-        for (i <- startK until selected.size) {
-          val c = selected(i)
-          val maxCorr = (0 until i).map(j => math.abs(g.corr(pos(c), j))).max
-          if (maxCorr < 0.9) good = good :+ c
-        }
-      }
-      goodCols = good
+    var goodCols = consolidate(selectedLists, featureCols, keep) { selected =>
+      val g = Gram.compute(scaled, selected)(0)
+      g.corr
     }
     // final noise filtering on the full scaled frame
     if (goodCols.nonEmpty) {
@@ -441,7 +440,7 @@ object FeatSel {
     * analysis, and a collect anyway (DenseLasso). One cluster job total (the
     * collect); everything else — scaling, subsampling, noise columns, all
     * CD fits, correlation filter — is driver array math. The 10^12-row
-    * table is never touched by selection in either regime.
+    * table is never touched by selection in any regime.
     */
   private def selectFeaturesDense(df: DataFrame, featureCols: Seq[String], targetCol: String,
                                   cfg: Config): Seq[String] = {
@@ -471,8 +470,7 @@ object FeatSel {
     x.foreach(scaleInPlace)
     val (y, w) =
       if (isClf) {
-        val nPos = yRaw.count(_ > 0.5).toDouble
-        val (w0, w1) = (n / (2.0 * math.max(n - nPos, 1.0)), n / (2.0 * math.max(nPos, 1.0)))
+        val (w0, w1) = LogisticLasso.balancedWeights(n, yRaw.count(_ > 0.5).toDouble)
         (yRaw.map(v => v * 4.0 - 2.0), yRaw.map(v => if (v > 0.5) w1 else w0))
       } else {
         val yc = yRaw.clone(); scaleInPlace(yc); (yc, Array.fill(n)(1.0))
@@ -516,30 +514,14 @@ object FeatSel {
       if (den == 0.0) Double.NaN else cov / den
     }
 
-    var goodCols: Seq[String] = featureCols
-    val flat = selectedLists.flatten
-    if (cfg.featselRuns >= 1 && flat.nonEmpty) {
-      val counts = flat.groupBy(identity).map { case (c, xs) => c -> xs.size }
-      var selected = counts.keys.toSeq.sortBy(c => -(counts(c) - 1e-6 * c.length))
-      selected = keep ++ selected.filterNot(keep.contains)
-      var good = if (keep.isEmpty) Seq(selected.head) else keep
-      val startK = good.size
-      if (selected.size > startK) {
-        val pos = featureCols.zipWithIndex.toMap
-        for (i <- startK until selected.size) {
-          val c = selected(i)
-          val maxCorr = (0 until i)
-            .map(j => math.abs(pearson(x(pos(c)), x(pos(selected(j)))))).max
-          if (maxCorr < 0.9) good = good :+ c
-        }
-      }
-      goodCols = good
+    val pos = featureCols.zipWithIndex.toMap
+    var goodCols = consolidate(selectedLists, featureCols, keep) { selected =>
+      (i, j) => pearson(x(pos(selected(i))), x(pos(selected(j))))
     }
     // final noise filtering on the full rows
     if (goodCols.nonEmpty) {
       val useShuffled = n > 50 && goodCols.size > 1
       val nGauss = math.max(3, goodCols.size / 2)
-      val pos = featureCols.zipWithIndex.toMap
       val shufRnd = new scala.util.Random(cfg.seed * 977 + 5)
       val gaussRnd = new scala.util.Random(cfg.seed * 677)
       val cols = Array.newBuilder[Array[Double]]

@@ -132,10 +132,9 @@ private[select] object GramOps {
   * Driver-side O(steps · |A|³) on the post-pruning column subset; the
   * distributed cost is identical to GramLasso (the same one Gram pass).
   */
-final class GramLars(folds: Array[Gram], maxActive: Int = 300) extends CvLasso {
+final class GramLars(folds: Array[Gram]) extends CvLasso {
   private val k = folds.length
   private val total: Gram = Gram.total(folds)
-  val n: Long = total.n
 
   /** One LARS-lasso path: knots (λ, β) from λmax down to `alphaMin` or the
     * active-set cap. β arrays are defensive copies per knot.
@@ -229,7 +228,7 @@ final class GramLars(folds: Array[Gram], maxActive: Int = 300) extends CvLasso {
   override def cvFit(idx: Array[Int]): LassoFit = {
     val d = idx.length
     require(d > 0, "empty column subset")
-    val activeCap = math.min(math.min(n - 1, d.toLong), maxActive.toLong).toInt
+    val activeCap = LassoPath.activeCap(total.n, d)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -245,18 +244,11 @@ final class GramLars(folds: Array[Gram], maxActive: Int = 300) extends CvLasso {
     }, Duration.Inf)
     val paths = perFold.flatten
     // union of every fold's knot λs (sklearn LarsCV's all_alphas)
-    val alphas = paths.flatMap(_._1.map(_._1)).distinct.sorted(Ordering.Double.TotalOrdering.reverse)
-    var best = 0.0
-    var bestMse = Double.MaxValue
-    alphas.foreach { alpha =>
-      val ms = paths.map { case (path, fold, mu, muY) =>
-        GramOps.foldMse(fold, idx, betaAt(path, alpha), mu, muY)
-      }.filter(!_.isNaN)
-      if (ms.nonEmpty) {
-        val m = ms.sum / ms.size
-        if (m < bestMse - 1e-15) { bestMse = m; best = alpha }
-      }
-    }
+    val alphas = paths.flatMap(_._1.map(_._1)).distinct.sorted(Ordering.Double.TotalOrdering.reverse).toArray
+    val bestAt = LassoPath.argminMse(alphas.size)(a => paths.map { case (path, fold, mu, muY) =>
+      GramOps.foldMse(fold, idx, betaAt(path, alphas(a)), mu, muY)
+    })
+    val best = if (bestAt < 0) 0.0 else alphas(bestAt)
     // full-data path read off at the winning λ
     val (gm, c, mu, muY) = GramOps.centered(total, idx)
     val full = larsPath(gm, c, activeCap, 0.0)

@@ -4,148 +4,42 @@ import graft.stats.Gram
 
 /** Driver-side L1 (Lasso) solver on pre-aggregated per-fold Grams —
   * the distributed counterpart of the reference's LassoLarsCV(cv=5)
-  * (featsel.py:66,110,147): one treeAggregate pass computes the k fold
-  * Grams; all subsequent fits over arbitrary column subsets are pure
-  * driver-side coordinate descent on Gram submatrices (no further cluster
-  * work). Model selection: CV MSE over a 100-point geometric λ path
-  * (coordinate descent approximates the exact LARS path; parity target is
-  * the SELECTED SET, not coefficient paths — SURVEY.md §7.4.2).
+  * (featsel.py:66,110,147): one ordered-reduce pass over the rows
+  * ([[graft.stats.Gram.compute]]) yields the k fold Grams; all subsequent
+  * fits over arbitrary column subsets are pure driver-side coordinate
+  * descent on Gram submatrices (no further cluster work). Model selection:
+  * CV MSE over a 60-point geometric λ path ([[LassoPath]]; coordinate
+  * descent approximates the exact LARS path; parity target is the SELECTED
+  * SET, not coefficient paths — SURVEY.md §7.4.2).
   */
 final class GramLasso(folds: Array[Gram]) extends CvLasso {
-  private val k = folds.length
   private val total: Gram = Gram.total(folds)
-  val n: Long = total.n
 
-  /** Coordinate descent at one λ on centered (G=XᵀX/n−μμᵀ, c=Xᵀy/n−μy·μx).
-    *
-    * Active-set strategy with a maintained residual correlation
-    * ρ = c − Gβ: converge on the current active set (O(d·|active|) per
-    * sweep via incremental ρ updates), then scan all coordinates once for
-    * KKT violations; repeat until none. With warm starts along the λ path
-    * the active set stays small, so a d≈1500 fit is ~ms, not minutes.
-    * `rho` must equal c − Gβ on entry (caller maintains it across the path).
+  override def cvFit(idx: Array[Int]): LassoFit =
+    LassoPath.cvFit(idx.length, total.n, folds.length, new GramLasso.Rho(total, idx, total), { f =>
+      val fold = folds(f)
+      if (fold.n > 0 && total.n - fold.n > 1) Some(new GramLasso.Rho(GramOps.minus(total, fold), idx, fold))
+      else None
+    })
+}
+
+private object GramLasso {
+
+  /** Covariance-form view: centered (G = XᵀX/n − μμᵀ, c = Xᵀy/n − μy·μx)
+    * of `g` over `idx`, with the residual correlation ρ = c − Gβ kept in
+    * step with β (O(d) per coordinate move). Scores on the `heldOut` Gram.
     */
-  private def cd(gram: Array[Array[Double]], c: Array[Double], lambda: Double,
-                 beta: Array[Double], rho: Array[Double],
-                 maxIter: Int = 200, tol: Double = 1e-6): Unit = {
-    val d = c.length
-    val active = new java.util.BitSet(d)
-    var j = 0
-    while (j < d) { if (beta(j) != 0.0) active.set(j); j += 1 }
-
-    def updateCoord(j: Int): Double = {
-      val gjj = gram(j)(j)
-      if (gjj <= 0) return 0.0
-      val rhoJ = rho(j) + gjj * beta(j) // partial residual incl. own term
-      val bNew =
-        if (rhoJ > lambda) (rhoJ - lambda) / gjj
-        else if (rhoJ < -lambda) (rhoJ + lambda) / gjj
-        else 0.0
-      val diff = bNew - beta(j)
-      if (diff != 0.0) {
-        val gj = gram(j)
-        var k = 0
-        while (k < d) { rho(k) -= gj(k) * diff; k += 1 }
-        beta(j) = bNew
-      }
-      math.abs(diff) * math.sqrt(gjj)
+  private final class Rho(g: Gram, idx: Array[Int], heldOut: Gram) extends LassoPath.View {
+    private val (gm, c, mu, muY) = GramOps.centered(g, idx)
+    private val rho = c.clone()
+    def norm(j: Int): Double = gm(j)(j)
+    def corr(j: Int): Double = rho(j)
+    def shift(j: Int, diff: Double): Unit = {
+      val gj = gm(j)
+      var k = 0
+      while (k < rho.length) { rho(k) -= gj(k) * diff; k += 1 }
     }
-
-    var outer = 0
-    var done = false
-    while (!done && outer < 100) {
-      outer += 1
-      // converge on the active set
-      var it = 0
-      var maxDelta = Double.MaxValue
-      while (it < maxIter && maxDelta > tol) {
-        maxDelta = 0.0
-        var jj = active.nextSetBit(0)
-        while (jj >= 0) {
-          val delta = updateCoord(jj)
-          if (delta > maxDelta) maxDelta = delta
-          if (beta(jj) == 0.0) active.clear(jj)
-          jj = active.nextSetBit(jj + 1)
-        }
-        it += 1
-      }
-      // KKT scan over inactive coordinates
-      done = true
-      j = 0
-      while (j < d) {
-        if (beta(j) == 0.0 && math.abs(rho(j)) > lambda + 1e-12) {
-          active.set(j)
-          done = false
-        }
-        j += 1
-      }
-    }
-  }
-
-
-  /** Cross-validated Lasso fit over the column subset `idx`.
-    *
-    * Like LassoLarsCV, the path is truncated once the active set reaches a
-    * LARS-style cap (min(n-1, d) bounded by `maxActive`) — solutions denser
-    * than that are never CV-optimal in this pipeline and dominate CD cost.
-    */
-  override def cvFit(idx: Array[Int]): LassoFit = cvFit(idx, 60, 1e-3, 300)
-
-  def cvFit(idx: Array[Int], nAlphas: Int, eps: Double,
-            maxActive: Int): LassoFit = {
-    val d = idx.length
-    require(d > 0, "empty column subset")
-    val activeCap = math.min(math.min(n - 1, d.toLong), maxActive.toLong).toInt
-    // λ path from the full training data
-    val (_, cFull, _, _) = GramOps.centered(total, idx)
-    val alphaMax = math.max(cFull.map(math.abs).max, 1e-12)
-    val alphas = (0 until nAlphas).map(i =>
-      alphaMax * math.pow(eps, i.toDouble / (nAlphas - 1))).toArray
-    // per-fold CD paths with warm starts, folds solved in parallel threads
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val perFold: Seq[(Array[Double], Int)] = Await.result(Future.traverse((0 until k).toList) { f =>
-      Future {
-        val fold = folds(f)
-        if (fold.n > 0 && total.n - fold.n > 1) {
-          val train = GramOps.minus(total, fold)
-          val (gm, c, mu, muY) = GramOps.centered(train, idx)
-          val beta = new Array[Double](d)
-          val rho = c.clone()
-          val mse = new Array[Double](nAlphas)
-          var truncAt = nAlphas
-          var a = 0
-          while (a < nAlphas && truncAt == nAlphas) {
-            cd(gm, c, alphas(a), beta, rho)
-            var nAct = 0
-            var j = 0
-            while (j < d) { if (beta(j) != 0.0) nAct += 1; j += 1 }
-            if (nAct > activeCap) truncAt = a
-            else { mse(a) = GramOps.foldMse(fold, idx, beta, mu, muY); a += 1 }
-          }
-          (mse, truncAt)
-        } else (Array.fill(nAlphas)(Double.NaN), nAlphas)
-      }
-    }, Duration.Inf)
-    val usable = perFold.map(_._2).min
-    var best = 0
-    var bestMse = Double.MaxValue
-    var a = 0
-    while (a < math.max(usable, 1)) {
-      val ms = perFold.map(_._1(a)).filter(!_.isNaN)
-      if (ms.nonEmpty) {
-        val m = ms.sum / ms.size
-        if (m < bestMse - 1e-15) { bestMse = m; best = a }
-      }
-      a += 1
-    }
-    // refit on all data at the selected λ (warm path down for stability)
-    val (gm, c, mu, muY) = GramOps.centered(total, idx)
-    val beta = new Array[Double](d)
-    val rho = c.clone()
-    a = 0
-    while (a <= best) { cd(gm, c, alphas(a), beta, rho); a += 1 }
-    LassoFit(beta, muY - GramOps.dot(mu, beta), alphas(best))
+    def mse(beta: Array[Double]): Double = GramOps.foldMse(heldOut, idx, beta, mu, muY)
+    def intercept(beta: Array[Double]): Double = muY - GramOps.dot(mu, beta)
   }
 }

@@ -4,9 +4,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distributed binary logistic regression via Newton-IRLS: each iteration is
-  * ONE treeAggregate computing the gradient X'(y-p) and Hessian X'WX with
-  * the current coefficients broadcast in the task closure (d is the small
-  * post-selection feature count, so the d² buffer is tiny). Supports
+  * ONE ordered-reduce pass (stats.DetReduce) computing the gradient X'(y-p)
+  * and Hessian X'WX with the current coefficients broadcast in the task
+  * closure (d is the small post-selection feature count, so the d² buffer
+  * is tiny). Supports
   * sklearn-style "balanced" class weights (reference final classifier,
   * autofeat.py:398: LogisticRegressionCV(class_weight="balanced")) and an
   * L2 ridge for conditioning.

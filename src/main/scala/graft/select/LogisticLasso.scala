@@ -14,8 +14,9 @@ import graft.stats.Gram
   * penalized log-likelihood into a weighted least-squares problem around the
   * current coefficients (IRLS working response z = m + (y-p)/(p(1-p)),
   * weights w = classWeight * p(1-p)), accumulates per-fold WEIGHTED Grams in
-  * ONE treeAggregate pass, and solves the L1 quadratic with driver-side
-  * coordinate descent over a cross-validated lambda path (GramLasso). Round 0
+  * ONE ordered-reduce pass (stats.DetReduce), and solves the L1 quadratic
+  * with driver-side coordinate descent over a cross-validated lambda path
+  * (GramLasso). Each round is [[irlsRound]], shared with FeatSel. Round 0
   * expands around beta = 0 (constant weights), so a 1-round fit degenerates
   * to the balanced-weighted Lasso on z = 4y - 2 — the surrogate the round-1
   * build used; extra rounds converge to the true L1 logistic optimum.
@@ -30,46 +31,47 @@ object LogisticLasso {
 
   private def q(c: String) = col(s"`${c.replace("`", "``")}`")
 
-  /** Balanced class weights (sklearn: n / (2 * n_c) for k=2). */
+  /** Balanced class weights (sklearn: n / (2 * n_c) for k=2) as (w0, w1). */
+  private[select] def balancedWeights(n: Double, nPos: Double): (Double, Double) =
+    (n / (2.0 * math.max(n - nPos, 1.0)), n / (2.0 * math.max(nPos, 1.0)))
+
   def classWeights(df: DataFrame, labelCol: String): (Double, Double) = {
     val r = df.agg(count(lit(1)), sum(q(labelCol).cast("double"))).collect()(0)
-    val n = r.getLong(0).toDouble
-    val nPos = r.getDouble(1)
-    (n / (2.0 * math.max(n - nPos, 1.0)), n / (2.0 * math.max(nPos, 1.0)))
+    balancedWeights(r.getLong(0).toDouble, r.getDouble(1))
   }
 
   /** Fit on double feature columns and a 0/1 label column. */
   def cvFit(df: DataFrame, featureCols: Seq[String], labelCol: String,
             folds: Int = 5, rounds: Int = 3, balanced: Boolean = true): Fit = {
-    val d = featureCols.size
-    require(d > 0, "no feature columns")
+    require(featureCols.nonEmpty, "no feature columns")
     val (w0, w1) = if (balanced) classWeights(df, labelCol) else (1.0, 1.0)
     val y = q(labelCol).cast("double")
     // deterministic fold assignment, stable across rounds (content-hashed)
     val foldCol = pmod(xxhash64(featureCols.map(q) :+ y: _*), lit(folds)).cast("int")
+    val cw = when(y > 0.5, lit(w1)).otherwise(lit(w0))
+    var fit = LassoFit(new Array[Double](featureCols.size), 0.0, 0.0)
+    for (_ <- 0 until rounds)
+      fit = irlsRound(df, featureCols, fit, y, cw, foldCol, folds, new GramLasso(_))
+    Fit(featureCols, fit.coef, fit.intercept, fit.alpha)
+  }
 
-    var beta = new Array[Double](d)
-    var b0 = 0.0
-    var alpha = 0.0
-    var r = 0
-    while (r < rounds) {
-      val margin: Column =
-        featureCols.zip(beta).filter(_._2 != 0.0)
-          .foldLeft(lit(b0).cast("double")) { case (acc, (c, b)) => acc + q(c).cast("double") * lit(b) }
-      val p = lit(1.0) / (lit(1.0) + exp(-margin))
-      val pc = least(greatest(p, lit(1e-5)), lit(1.0 - 1e-5)) // clamp for z stability
-      val cw = when(y > 0.5, lit(w1)).otherwise(lit(w0))
-      val wcol = cw * pc * (lit(1.0) - pc)
-      val zcol = margin + (y - pc) / (pc * (lit(1.0) - pc))
-      val frame = df.select(
-        Seq(foldCol.as("__fold"), wcol.as("__w"), zcol.as("__z")) ++ featureCols.map(q): _*)
-      val grams = Gram.compute(frame, featureCols, Some("__z"), Some("__fold"), folds, Some("__w"))
-      val fit = new GramLasso(grams).cvFit(featureCols.indices.toArray)
-      beta = fit.coef
-      b0 = fit.intercept
-      alpha = fit.alpha
-      r += 1
-    }
-    Fit(featureCols, beta, b0, alpha)
+  /** One proximal-Newton round: expands the balanced L1-logistic objective
+    * around `at` (margin m, p clamped to [1e-5, 1 − 1e-5] for z stability,
+    * weights cw·p(1−p), working response z = m + (y−p)/(p(1−p))), computes
+    * the weighted fold Grams of `cols` in one pass over `df`, and fits them
+    * with the solver that `solver` builds.
+    */
+  private[select] def irlsRound(df: DataFrame, cols: Seq[String], at: LassoFit, y: Column,
+                                classWeight: Column, fold: Column, folds: Int,
+                                solver: Array[Gram] => CvLasso): LassoFit = {
+    val margin: Column = cols.zip(at.coef).filter(_._2 != 0.0)
+      .foldLeft(lit(at.intercept).cast("double")) { case (acc, (c, b)) => acc + q(c).cast("double") * lit(b) }
+    val p = lit(1.0) / (lit(1.0) + exp(-margin))
+    val pc = least(greatest(p, lit(1e-5)), lit(1.0 - 1e-5))
+    val w = classWeight * pc * (lit(1.0) - pc)
+    val z = margin + (y - pc) / (pc * (lit(1.0) - pc))
+    val frame = df.select(Seq(fold.as("__fold"), w.as("__nw"), z.as("__nz")) ++ cols.map(q): _*)
+    val grams = Gram.compute(frame, cols, Some("__nz"), Some("__fold"), folds, Some("__nw"))
+    solver(grams).cvFit(cols.indices.toArray)
   }
 }

@@ -78,23 +78,6 @@ object Drive {
       println(f"YJ_TL mean=${r.getDouble(0)}%.6f std=${r.getDouble(1)}%.6f skew=${r.getDouble(2)}%.4f")
       println("YJ_CONST_FINITE=" + out.filter(col("const").isNull || isnan(col("const"))).count())
     }
-    // classification selection (balanced L1-logistic quadratic) on a planted
-    // logistic target from real transcript features
-    {
-      import graft.select.{FeatSel, LogisticLasso}
-      val feats = Seq("text_len", "secs_since_prev", "turns_so_far", "cum_tool_calls")
-      val base = f.select(feats.map(c => col(c).cast("double")): _*)
-      val withY = base.withColumn("y",
-        (lit(0.002) * col("text_len") - lit(0.5) * col("turns_so_far") + randn(7) > 0).cast("double"))
-      val picked = FeatSel.selectFeatures(withY, feats, "y",
-        FeatSel.Config(problemType = "classification", featselRuns = 2))
-      println("CLF_SELECTED=" + picked.mkString(" | "))
-      val picked3 = FeatSel.selectFeatures(withY, feats, "y",
-        FeatSel.Config(problemType = "classification", featselRuns = 2, selectionNewtonRounds = 3))
-      println("CLF_SELECTED_NEWTON3=" + picked3.mkString(" | "))
-      val fit = LogisticLasso.cvFit(withY, feats, "y", rounds = 2)
-      println("CLF_COEF=" + fit.cols.zip(fit.coef).map { case (c, b) => f"$c=$b%.4f" }.mkString(" "))
-    }
     // native vec_dot: parity with HOF path, nulls, length mismatch, empties
     {
       import spark.implicits._
@@ -359,16 +342,6 @@ object Drive {
         AutoFeatConfig(problemType = "classification", feategSteps = 0, featselRuns = 1)); "NO ERROR (bad)" }
         catch { case e: IllegalArgumentException => "errored as expected" }
       println("ONECLASS=" + oneErr)
-      // LARS solver flag through selection
-      import graft.select.FeatSel
-      val lDf = Seq.fill(600) {
-        val c = Array.fill(4)(rng.nextGaussian())
-        (c(0), c(1), c(2), c(3), 2.0 * c(1) - c(3) + rng.nextGaussian() * 0.05)
-      }.toDF("g0", "g1", "g2", "g3", "y")
-      val cd = FeatSel.selectFeatures(lDf, Seq("g0", "g1", "g2", "g3"), "y")
-      val lars = FeatSel.selectFeatures(lDf, Seq("g0", "g1", "g2", "g3"), "y",
-        FeatSel.Config(solver = "lars"))
-      println(s"LARS_VS_CD cd=${cd.sorted.mkString(",")} lars=${lars.sorted.mkString(",")}")
       // frontier connected components with convergence info
       import graft.pipeline.Dedup
       val chain = (1L until 30L).map(i => (i, i + 1)).toDF("id1", "id2")

@@ -93,4 +93,26 @@ class FeatSelSpec extends SparkSpec {
     val par = FeatSel.selectFeatures(df, cols, "target", FeatSel.Config(nJobs = 5))
     assert(par == seq, s"nJobs=5 gave $par, nJobs=1 gave $seq")
   }
+
+  test("480 < d <= 1200 classification: per-run collect + weighted DenseLasso recovers planted columns") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+    // d features + d shuffled copies + d/2 Gaussian columns exceed the
+    // 1200-column fold-Gram bound while d alone stays under it: each run
+    // collects its block and fits the IRLS-weighted dense solver
+    val d = 490
+    val names = (0 until d).map(i => s"w$i")
+    val rng = new scala.util.Random(29)
+    val rows = Seq.fill(250) {
+      val x = Array.fill(d)(rng.nextGaussian())
+      val m = 3.0 * x(0) - 2.0 * x(5) + 1.5 * x(d - 1) + 0.5 * rng.nextGaussian()
+      Row.fromSeq(x.toSeq :+ (if (m > 0) 1.0 else 0.0))
+    }
+    val schema = StructType((names :+ "label").map(StructField(_, DoubleType)))
+    val wide = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema).cache()
+    val good = FeatSel.selectFeatures(wide, names, "label",
+      FeatSel.Config(problemType = "classification", featselRuns = 2))
+    assert(Set("w0", "w5", s"w${d - 1}").subsetOf(good.toSet), s"selected $good")
+    assert(good.size <= 8, s"too many false positives: $good")
+  }
 }

@@ -78,6 +78,11 @@ class LogisticLassoSpec extends SparkSpec {
     // converged selection finds the planted pair without drowning in noise
     assert(newton.contains("x1") && newton.contains("x4"), s"selected $newton")
     assert(newton.size <= 4, s"too many false positives: $newton")
+    // every Newton round fits with the configured solver, LARS included
+    val larsNewton = FeatSel.selectFeatures(df, cols, "y",
+      FeatSel.Config(problemType = "classification", selectionNewtonRounds = 3, solver = "lars"))
+    assert(larsNewton.contains("x1") && larsNewton.contains("x4"), s"selected $larsNewton")
+    assert(larsNewton.size <= 4, s"too many false positives: $larsNewton")
     // the default surrogate must also recover the pair (rounds=1 is the
     // same code path — no Newton wrapper is constructed). NOTE: exact
     // set equality between repeated runs is NOT asserted on this fixture:
