@@ -63,7 +63,7 @@ final case class AutoFeatLight(
       // first (biased std), then optional PowerTransformer(standardize=True)
       val st = Scaling.stats(out, features)
       val divs = features.zipWithIndex.map { case (c, i) =>
-        c -> (if (st.stdPop(i) == 0.0 || st.stdPop(i).isNaN) 1.0 else st.stdPop(i))
+        c -> Scaling.divisor(st.stdPop(i))
       }.toMap
       val scaled = out.select(features.map(c => (col(AutoFeatLight.quoted(c)) / lit(divs(c))).as(c)): _*)
       if (powerTransform) {

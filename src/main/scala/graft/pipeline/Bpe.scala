@@ -273,7 +273,8 @@ object BpeModel {
   * localCheckpoint every `checkpointEvery` rounds so 200-round trainings
   * neither replay the corpus scan nor build unbounded plans.
   *
-  * Merge-loop regimes (the FeatSel gramMaxCols split): the per-round cost
+  * Merge-loop regimes (a size bound picks the regime, like FeatSel's
+  * gramMaxCols split between fold Grams and the driver): the per-round cost
   * used to be a FULL adjacent-pair recount over the word table — one
   * explode + aggregate + TakeOrdered job per merge, ~0.12 s of driver-loop
   * floor latency per round at any corpus size, i.e. hours for a realistic

@@ -2,7 +2,7 @@ package graft.select
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -21,15 +21,17 @@ import graft.stats.{Gram, Scaling}
   * serve the correlation filter and the final noise filter. So a full
   * 5-run selection costs ~7 ordered-reduce jobs over the (admission-bounded)
   * subsample — the 10^12-row table is never touched here. Wider frames
-  * leave the Gram path (see [[gramMaxCols]] for the three regimes).
+  * run the whole selection on the driver instead (see [[gramMaxCols]] for
+  * the two regimes).
   *
   * Documented deviations from the reference (SURVEY.md §7.4.3): our own RNG
   * (not numpy MT19937); the shuffled-noise copy permutes whole ROWS of the
-  * feature block with one global permutation (reference permutes the
-  * flattened pool, destroying cross-column structure too; both preserve
-  * per-column marginals and break the X→y link, which is all the noise
-  * threshold uses); one noise draw per run is reused by that run's fits
-  * rather than redrawn per fit.
+  * feature block with one global permutation in the fold-Gram regime and
+  * each column independently in the driver regime (the reference permutes
+  * the flattened pool, destroying cross-column structure too; all three
+  * preserve per-column marginals and break the X→y link, which is all the
+  * noise threshold uses); one noise draw per run is reused by that run's
+  * fits rather than redrawn per fit.
   */
 object FeatSel {
 
@@ -47,17 +49,18 @@ object FeatSel {
         * each fit around its current coefficients (LogisticLasso-style IRLS
         * weights), one extra distributed Gram pass over JUST the fitted
         * columns per extra round — use when reference-set parity matters on
-        * far-from-origin (heavily imbalanced) problems. Gram regime only;
-        * the dense d>>n regime keeps the one-step surrogate.
+        * far-from-origin (heavily imbalanced) problems. Fold-Gram regime
+        * only (d <= 480, see [[gramMaxCols]]); the driver regime keeps the
+        * one-step surrogate.
         */
       selectionNewtonRounds: Int = 1,
-      /** Lasso solver for the Gram regime: "cd" (default — coordinate
-        * descent over a geometric λ grid) or "lars" (exact
-        * LARS-with-lasso-modification path, the reference's LassoLarsCV
-        * algorithm — SURVEY §7.4.2's mitigation when CD set drift matters).
-        * Both consume the SAME one-pass fold Grams; the dense d≫n regime
-        * keeps CD (its admission-bounded driver block makes path exactness
-        * moot there).
+      /** Lasso solver for the fold-Gram regime (d <= 480, see
+        * [[gramMaxCols]]): "cd" (default — coordinate descent over a
+        * geometric λ grid) or "lars" (exact LARS-with-lasso-modification
+        * path, the reference's LassoLarsCV algorithm — SURVEY §7.4.2's
+        * mitigation when CD set drift matters). Both consume the SAME
+        * one-pass fold Grams; the driver regime keeps CD (its
+        * admission-bounded driver block makes path exactness moot there).
         */
       solver: String = "cd"
   )
@@ -84,6 +87,8 @@ object FeatSel {
   }
 
   private def q(c: String) = col(s"`${c.replace("`", "``")}`")
+
+  private val NoRows = "[featsel] no clean rows"
 
   /** Adds row-shuffled copies of `cols` named `__shuf_i`: ONE global random
     * permutation applied to the whole feature-row vector (see the deviation
@@ -137,13 +142,12 @@ object FeatSel {
   }
 
   /** Collects a projection as column-major primitive arrays. Rows with any
-    * null/NaN among the selected columns are dropped executor-side; with
-    * `requirePositiveFirst` rows whose first column is <= 0 are dropped too
-    * (the IRLS-weight convention). Partitions pack their own double arrays,
-    * so the driver's peak footprint is the primitive data itself rather than
-    * boxed GenericRows (which cost several times rows·cols·8 bytes).
+    * null/NaN among the selected columns are dropped executor-side.
+    * Partitions pack their own double arrays, so the driver's peak footprint
+    * is the primitive data itself rather than boxed GenericRows (which cost
+    * several times rows·cols·8 bytes).
     */
-  private def collectPrimitive(proj: DataFrame, requirePositiveFirst: Boolean = false): Array[Array[Double]] = {
+  private def collectPrimitive(proj: DataFrame): Array[Array[Double]] = {
     val k = proj.columns.length
     // InternalRow pass (toRdd, not .rdd): no per-field boxing; values are
     // copied into the builders immediately, row objects never retained
@@ -156,7 +160,7 @@ object FeatSel {
           ok = !r.isNullAt(i) && !r.getDouble(i).isNaN
           i += 1
         }
-        if (ok && (!requirePositiveFirst || r.getDouble(0) > 0.0)) {
+        if (ok) {
           var j = 0
           while (j < k) { bld(j) += r.getDouble(j); j += 1 }
         }
@@ -175,71 +179,55 @@ object FeatSel {
     }
   }
 
-  /** Column-count bound of the fold-Gram solver. Fold Grams cost
+  /** Column-count bound of one fold-Gram fit universe. Fold Grams cost
     * folds·d²/2 doubles of sufficient statistics (one ordered-reduce pass,
     * stats.DetReduce) and never re-touch the rows; past this many columns
-    * d² outgrows the raw n·d block of the admission-bounded subsample, which
-    * is then collected and fit dense on the driver — the same bytes model
-    * (rows·cols·4 <= max_gb) the reference holds in RAM. It splits selection
-    * into three regimes:
-    *  - fold Grams per run ([[runGrams]]), while a run's fit universe —
-    *    d features + d shuffled copies + max(3, d/2) Gaussian columns — has
-    *    at most 1200 columns, i.e. d <= 480;
-    *  - a per-run collect + [[DenseLasso]] ([[runGrams]]) for that universe
-    *    past 1200 columns (480 < d <= 1200); the final noise filter applies
-    *    the same test to the consolidated columns;
-    *  - the whole selection on the driver ([[selectFeaturesDense]]) once the
-    *    d features alone exceed 1200.
+    * d² outgrows the raw n·d block of the admission-bounded subsample. It
+    * splits selection into two regimes ([[foldGramsFit]]):
+    *  - fold Grams per run ([[runGrams]]) while a run's largest fit
+    *    universe — d features + d shuffled copies + max(3, d/2) Gaussian
+    *    columns — has at most 1200 columns, i.e. d <= 480;
+    *  - past it, the whole selection on the driver ([[selectFeaturesDense]])
+    *    over one collected block — the same bytes model (rows·cols·4 <=
+    *    max_gb) the reference holds in RAM.
     */
   private val gramMaxCols = 1200
 
-  /** Build the solver for one selection run's frame (already holding noise
+  /** Whether a d-feature selection runs on fold Grams: its largest fit
+    * universe stays within [[gramMaxCols]] columns (true up to d = 480).
+    */
+  private[select] def foldGramsFit(d: Int): Boolean = 2 * d + math.max(3, d / 2) <= gramMaxCols
+
+  /** Fold-Gram solver for one selection run's frame (already holding noise
     * columns). `weightCol` (classification) makes fits IRLS-weighted.
     */
   private def runGrams(frame: DataFrame, featCols: Seq[String], shufCols: Seq[String],
                        gaussCols: Seq[String], targetCol: String, folds: Int,
-                       weightCol: Option[String] = None,
-                       newtonRounds: Int = 1,
-                       lassoSolver: String = "cd"): RunGrams = {
+                       weightCol: Option[String], newtonRounds: Int, lassoSolver: String): RunGrams = {
     val all = featCols ++ shufCols ++ gaussCols
-    val solver: CvLasso =
-      if (all.size <= gramMaxCols) {
-        val withFold = frame.withColumn("__fold", pmod(monotonically_increasing_id(), lit(folds)).cast("int"))
-        val grams = Gram.compute(withFold, all, Some(targetCol), Some("__fold"), folds, weightCol)
-        val solverOf: Array[Gram] => CvLasso =
-          if (lassoSolver == "lars") new GramLars(_) else new GramLasso(_)
-        val base = solverOf(grams)
-        weightCol match {
-          case Some(cw) if newtonRounds > 1 =>
-            // proximal-Newton rounds (classification): round 0 is the base
-            // fit's one-step quadratic around beta = 0 (the run Grams); each
-            // extra round re-expands around the current coefficients with
-            // one weighted Gram pass over JUST the fitted columns. The
-            // frame's target holds the round-0 working response z0 = 4y - 2.
-            val y = (q(targetCol).cast("double") + lit(2.0)) / lit(4.0)
-            val universe = all.toIndexedSeq
-            idx => {
-              val cols = idx.map(universe).toSeq
-              (1 until newtonRounds).foldLeft(base.cvFit(idx)) { (fit, _) =>
-                LogisticLasso.irlsRound(withFold, cols, fit, y, q(cw).cast("double"), col("__fold"),
-                  folds, solverOf)
-              }
-            }
-          case _ => base
+    val withFold = frame.withColumn("__fold", pmod(monotonically_increasing_id(), lit(folds)).cast("int"))
+    val grams = Gram.compute(withFold, all, Some(targetCol), Some("__fold"), folds, weightCol)
+    val solverOf: Array[Gram] => CvLasso =
+      if (lassoSolver == "lars") new GramLars(_) else new GramLasso(_)
+    val base = solverOf(grams)
+    val solver: CvLasso = weightCol match {
+      case Some(cw) if newtonRounds > 1 =>
+        // proximal-Newton rounds (classification): round 0 is the base
+        // fit's one-step quadratic around beta = 0 (the run Grams); each
+        // extra round re-expands around the current coefficients with
+        // one weighted Gram pass over JUST the fitted columns. The
+        // frame's target holds the round-0 working response z0 = 4y - 2.
+        val y = (q(targetCol).cast("double") + lit(2.0)) / lit(4.0)
+        val universe = all.toIndexedSeq
+        idx => {
+          val cols = idx.map(universe).toSeq
+          (1 until newtonRounds).foldLeft(base.cvFit(idx)) { (fit, _) =>
+            LogisticLasso.irlsRound(withFold, cols, fit, y, q(cw).cast("double"), col("__fold"),
+              folds, solverOf)
+          }
         }
-      } else {
-        val wExpr = weightCol.map(q).getOrElse(lit(1.0))
-        // executor-side primitive packing: each partition filters bad rows
-        // and emits column-major double arrays, so the driver receives
-        // exactly rows·(d+2)·8 bytes — no boxed Row/Double overhead
-        val packed = collectPrimitive(frame.select(
-          Seq(wExpr.cast("double").as("__wv"), q(targetCol).cast("double").as("__yv")) ++
-            all.map(c => q(c).cast("double")): _*), requirePositiveFirst = true)
-        val d = all.size
-        val y = packed(1)
-        val foldOf = Array.tabulate(y.length)(_ % folds)
-        new DenseLasso(packed.drop(2), y, packed(0), foldOf, folds)
-      }
+      case _ => base
+    }
     new RunGrams(solver, featCols.size, shufCols.nonEmpty, gaussCols.size)
   }
 
@@ -358,31 +346,26 @@ object FeatSel {
         return keep ++ perClass.flatten.distinct.filterNot(keep.contains)
       }
     }
-    // d >> n regime: the whole selection moves to the driver over ONE
-    // collected block (see selectFeaturesDense) — same bytes model the
+    // past the fold-Gram bound the whole selection moves to the driver over
+    // ONE collected block (see selectFeaturesDense) — same bytes model the
     // reference holds in RAM; zero per-run cluster round-trips
-    if (featureCols.size > gramMaxCols)
+    if (!foldGramsFit(featureCols.size))
       return selectFeaturesDense(df, featureCols, targetCol, cfg)
-    val spark = df.sparkSession
     val keep = cfg.keep.filter(featureCols.contains)
     // scale features (and, for regression, the target) — nan-aware, ddof=0
-    val st = Scaling.stats(df, if (isClf) featureCols else featureCols :+ targetCol)
-    val scaledFeatCols = featureCols.zipWithIndex.map { case (c, i) =>
-      ((q(c).cast("double") - lit(st.mean(i))) / lit(st.stdPop(i))).as(c)
-    }
+    val scaledCols = if (isClf) featureCols else featureCols :+ targetCol
     val weightCol: Option[String] = if (isClf) Some("__w") else None
-    val targetAndWeight: Seq[org.apache.spark.sql.Column] =
+    val targetAndWeight: Seq[Column] =
       if (isClf) {
         val (w0, w1) = LogisticLasso.classWeights(df, targetCol)
         val y = q(targetCol).cast("double")
         Seq((y * 4.0 - 2.0).as(targetCol), when(y > 0.5, lit(w1)).otherwise(lit(w0)).as("__w"))
-      } else {
-        val i = featureCols.size
-        Seq(((q(targetCol).cast("double") - lit(st.mean(i))) / lit(st.stdPop(i))).as(targetCol))
-      }
-    val scaled = df.select(scaledFeatCols ++ targetAndWeight: _*)
+      } else Nil
+    val scaled = Scaling.scaled(df, scaledCols, Scaling.stats(df, scaledCols), targetAndWeight: _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nTotal = scaled.count()
+    if (nTotal == 0) scaled.unpersist()
+    require(nTotal > 0, NoRows)
     val d = featureCols.size
 
     val selectedLists = mapRuns(math.max(0, cfg.featselRuns), cfg.nJobs) { run =>
@@ -431,16 +414,17 @@ object FeatSel {
     keep ++ goodCols.filterNot(keep.contains)
   }
 
-  /** Selection entirely on the driver for wide synthesized frames (d >> n).
+  /** Selection entirely on the driver for frames past the fold-Gram bound
+    * (d > 480, see [[gramMaxCols]]).
     *
     * The selection input is the admission-bounded subsample (reference bytes
     * model rows·cols·4 <= max_gb, autofeat.py:322-333) — collecting it once
-    * costs exactly what the reference itself holds in RAM, while the
-    * distributed path would pay per-run shuffled-copy shuffles, wide-frame
-    * analysis, and a collect anyway (DenseLasso). One cluster job total (the
-    * collect); everything else — scaling, subsampling, noise columns, all
-    * CD fits, correlation filter — is driver array math. The 10^12-row
-    * table is never touched by selection in any regime.
+    * costs exactly what the reference itself holds in RAM, while fold Grams
+    * would outgrow that block and pay per-run shuffled-copy shuffles and
+    * wide-frame analysis. One cluster job total (the collect); everything
+    * else — scaling, subsampling, noise columns, all CD fits, correlation
+    * filter — is driver array math. The 10^12-row table is never touched by
+    * selection in either regime.
     */
   private def selectFeaturesDense(df: DataFrame, featureCols: Seq[String], targetCol: String,
                                   cfg: Config): Seq[String] = {
@@ -453,7 +437,7 @@ object FeatSel {
     val packed = collectPrimitive(
       df.select((featureCols :+ targetCol).map(c => q(c).cast("double")): _*))
     val n = packed(0).length
-    require(n > 0, "[featsel] no clean rows")
+    require(n > 0, NoRows)
     val x = packed.take(d)
     val yRaw = packed(d)
     // standard scale (ddof=0) — nb_standard_scale semantics
@@ -462,8 +446,7 @@ object FeatSel {
       var t = 0
       while (t < c.length) { s += c(t); ss += c(t) * c(t); t += 1 }
       val m = s / c.length
-      val sd = math.sqrt(math.max(0.0, ss / c.length - m * m))
-      val div = if (sd > 0) sd else 1.0
+      val div = Scaling.divisor(math.sqrt(math.max(0.0, ss / c.length - m * m)))
       t = 0
       while (t < c.length) { c(t) = (c(t) - m) / div; t += 1 }
     }

@@ -1,9 +1,9 @@
 package graft.select
 
 /** Cross-validated L1 fit over a column subset — implemented by the
-  * distributed-Gram solvers ([[GramLasso]], [[GramLars]]) and the dense
-  * driver solver ([[DenseLasso]]); the selection control flow is
-  * solver-agnostic.
+  * distributed-Gram solvers ([[GramLasso]], [[GramLars]]; FeatSel's d <= 480
+  * regime) and the dense driver solver ([[DenseLasso]]; its d > 480
+  * regime); the selection control flow is solver-agnostic.
   */
 trait CvLasso {
   def cvFit(idx: Array[Int]): LassoFit

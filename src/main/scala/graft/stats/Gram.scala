@@ -1,6 +1,6 @@
 package graft.stats
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Accumulated second-order statistics of a feature block (+ optional target):
@@ -247,11 +247,20 @@ object Scaling {
     Stats(m, sp, ssamp, ns)
   }
 
-  /** Project columns to nan-aware standard scores: (x - nanmean) / nanstd. */
-  def scaled(df: DataFrame, cols: Seq[String], st: Stats): DataFrame = {
+  /** Standard-score divisor for a column of population std `sd`: `sd` when
+    * it is positive, else 1 (zero-variance, all-null or NaN columns), so a
+    * constant column scales to zeros instead of dividing by zero.
+    */
+  def divisor(sd: Double): Double = if (sd > 0) sd else 1.0
+
+  /** Project columns to nan-aware standard scores, (x - nanmean) /
+    * divisor(nanstd), followed by the `extra` columns.
+    */
+  def scaled(df: DataFrame, cols: Seq[String], st: Stats, extra: Column*): DataFrame = {
     val proj = cols.zipWithIndex.map { case (c, i) =>
-      ((col(s"`${c.replace("`", "``")}`").cast("double") - lit(st.mean(i))) / lit(st.stdPop(i))).as(c)
+      val x = col(s"`${c.replace("`", "``")}`").cast("double")
+      ((x - lit(st.mean(i))) / lit(divisor(st.stdPop(i)))).as(c)
     }
-    df.select(proj: _*)
+    df.select(proj ++ extra: _*)
   }
 }

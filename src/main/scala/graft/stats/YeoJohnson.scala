@@ -31,7 +31,7 @@ object YeoJohnson {
       val trans = cols.zipWithIndex.map { case (c, i) =>
         val t = YeoJohnson.psi(qcol(c).cast("double"), lambdas(i))
         val out = if (!standardize) t
-          else (t - lit(mean(i))) / lit(if (stdPop(i) > 0 && !stdPop(i).isNaN) stdPop(i) else 1.0)
+          else (t - lit(mean(i))) / lit(Scaling.divisor(stdPop(i)))
         out.as(c)
       }
       df.select(others.toSeq ++ trans: _*)

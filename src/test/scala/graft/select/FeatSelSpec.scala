@@ -94,25 +94,53 @@ class FeatSelSpec extends SparkSpec {
     assert(par == seq, s"nJobs=5 gave $par, nJobs=1 gave $seq")
   }
 
-  test("480 < d <= 1200 classification: per-run collect + weighted DenseLasso recovers planted columns") {
+  /** Planted regression fixture: y = 3·w0 − 2·w5 + 1.5·w(d−1) + noise. */
+  private def planted(d: Int, n: Int): (org.apache.spark.sql.DataFrame, Seq[String], Set[String]) = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    // d features + d shuffled copies + d/2 Gaussian columns exceed the
-    // 1200-column fold-Gram bound while d alone stays under it: each run
-    // collects its block and fits the IRLS-weighted dense solver
-    val d = 490
     val names = (0 until d).map(i => s"w$i")
-    val rng = new scala.util.Random(29)
-    val rows = Seq.fill(250) {
+    val rng = new scala.util.Random(31 + d)
+    val rows = Seq.fill(n) {
       val x = Array.fill(d)(rng.nextGaussian())
-      val m = 3.0 * x(0) - 2.0 * x(5) + 1.5 * x(d - 1) + 0.5 * rng.nextGaussian()
-      Row.fromSeq(x.toSeq :+ (if (m > 0) 1.0 else 0.0))
+      Row.fromSeq(x.toSeq :+ (3.0 * x(0) - 2.0 * x(5) + 1.5 * x(d - 1) + 0.5 * rng.nextGaussian()))
     }
-    val schema = StructType((names :+ "label").map(StructField(_, DoubleType)))
-    val wide = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema).cache()
-    val good = FeatSel.selectFeatures(wide, names, "label",
-      FeatSel.Config(problemType = "classification", featselRuns = 2))
-    assert(Set("w0", "w5", s"w${d - 1}").subsetOf(good.toSet), s"selected $good")
-    assert(good.size <= 8, s"too many false positives: $good")
+    val schema = StructType((names :+ "y").map(StructField(_, DoubleType)))
+    val frame = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema).cache()
+    (frame, names, Set("w0", "w5", s"w${d - 1}"))
+  }
+
+  private val cfg2 = FeatSel.Config(featselRuns = 2)
+
+  test("fold-Gram bound: d = 480 runs on fold Grams, d = 481 on the driver; both recover the planted columns") {
+    for ((d, onGrams) <- Seq(480 -> true, 481 -> false)) {
+      assert(FeatSel.foldGramsFit(d) == onGrams, s"d = $d")
+      val (frame, names, truth) = planted(d, 300)
+      val good = FeatSel.selectFeatures(frame, names, "y", cfg2)
+      assert(truth.subsetOf(good.toSet), s"d = $d selected $good")
+      frame.unpersist()
+    }
+  }
+
+  test("zero-variance feature or target selects without error in both regimes") {
+    for (d <- Seq(20, 481)) {
+      val (frame, names, truth) = planted(d, 300)
+      val constFeature = frame.withColumn("w1", lit(2.5))
+      val good = FeatSel.selectFeatures(constFeature, names, "y", cfg2)
+      assert(truth.subsetOf(good.toSet) && !good.contains("w1"), s"d = $d selected $good")
+      val constTarget = FeatSel.selectFeatures(frame.withColumn("y", lit(2.5)), names, "y", cfg2)
+      assert(constTarget.isEmpty, s"d = $d constant target selected $constTarget")
+      frame.unpersist()
+    }
+  }
+
+  test("an empty frame fails loudly in both regimes") {
+    for (d <- Seq(20, 481)) {
+      val (frame, names, _) = planted(d, 20)
+      val e = intercept[IllegalArgumentException] {
+        FeatSel.selectFeatures(frame.filter(lit(false)), names, "y", cfg2)
+      }
+      assert(e.getMessage.contains("no clean rows"), s"d = $d: ${e.getMessage}")
+      frame.unpersist()
+    }
   }
 }
