@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Json
+
 /** Resumable stage output with per-partition lineage + metrics
   * (SURVEY.md §2.10, north rule): the output is hash-bucketed by an entity
   * key into `nBuckets` parquet subdirectories; every completed bucket gets a
@@ -12,7 +14,9 @@ import org.apache.spark.sql.functions._
   * featureHash is an order-independent xxhash64 aggregate over all columns
   * VERIFIED BY READING BACK what landed on disk. A restarted job skips
   * buckets whose manifest exists and recomputes only the missing ones, so a
-  * 10^12-row regeneration survives preemption at bucket granularity.
+  * 10^12-row regeneration survives preemption at bucket granularity. It
+  * refuses a directory whose manifests carry another lineage, so two
+  * different jobs never mix their buckets in one output.
   */
 object Checkpoint {
 
@@ -25,27 +29,37 @@ object Checkpoint {
 
   def readManifest(dir: String, part: Int): Manifest = {
     val s = new String(Files.readAllBytes(Paths.get(manifestPath(dir, part))), "UTF-8")
-    def field(k: String) = s.split(s""""$k":""")(1).split("[,}]")(0).trim.stripPrefix("\"").stripSuffix("\"")
-    Manifest(field("part").toInt, field("rows").toLong, field("featureHash").toLong, field("lineage"))
+    val f = Json.parse(s).asInstanceOf[Vector[(String, Any)]].toMap
+    Manifest(f("part").asInstanceOf[Long].toInt, f("rows").asInstanceOf[Long],
+      f("featureHash").asInstanceOf[Long], f("lineage").asInstanceOf[String])
   }
+
+  private def q(c: String): Column = col(s"`${c.replace("`", "``")}`")
 
   /** Order-independent content hash: sum of per-row xxhash64 over the given
     * columns (doubles hashed via their IEEE bits for stability).
     */
   private def rowHash(df: DataFrame): Column = {
     // xxhash64 hashes doubles by their IEEE-754 bits — stable across runs
-    val cols = df.columns.sorted.map(c => col(s"`${c.replace("`", "``")}`"))
+    val cols = df.columns.sorted.map(q)
     xxhash64(cols.toIndexedSeq: _*)
   }
 
   /** Write `df` bucketed by hash(keyCol) % nBuckets, skipping buckets that
     * already have a manifest. Returns all manifests (existing + new).
+    * Throws `IllegalStateException`, touching no file, when an existing
+    * manifest's lineage is not `lineage`.
     */
   def writeResumable(df: DataFrame, dir: String, keyCol: String, nBuckets: Int,
                      lineage: String): Seq[Manifest] = {
     val spark = df.sparkSession
     Files.createDirectories(Paths.get(dir))
     val done = completedParts(dir, nBuckets)
+    // checked before the partial-bucket cleanup below deletes anything
+    done.toSeq.sorted.map(readManifest(dir, _)).find(_.lineage != lineage).foreach { m =>
+      throw new IllegalStateException(s"[ckpt] $dir part ${m.part} was written with lineage " +
+        s"${Json.quote(m.lineage)}, not ${Json.quote(lineage)}")
+    }
     val todo = (0 until nBuckets).filterNot(done)
     if (todo.nonEmpty) {
       // a bucket without a manifest may hold a partial write from a crashed
@@ -58,7 +72,7 @@ object Checkpoint {
         }
       }
       val withPart = df.withColumn("__part",
-        pmod(xxhash64(col(keyCol)), lit(nBuckets)).cast("int"))
+        pmod(xxhash64(q(keyCol)), lit(nBuckets)).cast("int"))
       val subset = withPart.filter(col("__part").isin(todo: _*))
       subset.write.mode("append").partitionBy("__part").parquet(dir)
       // verify-by-readback: metrics computed from what is on disk
@@ -75,8 +89,8 @@ object Checkpoint {
       val byPart = stats.map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
       todo.foreach { p =>
         val (rows, h) = byPart.getOrElse(p, (0L, 0L))
-        val json =
-          s"""{"part":$p,"rows":$rows,"featureHash":$h,"lineage":"$lineage","writtenAt":"${java.time.Instant.now()}"}"""
+        val json = s"""{"part":$p,"rows":$rows,"featureHash":$h,"lineage":${Json.quote(lineage)},""" +
+          s""""writtenAt":"${java.time.Instant.now()}"}"""
         Files.write(Paths.get(manifestPath(dir, p)), json.getBytes("UTF-8"))
       }
     }

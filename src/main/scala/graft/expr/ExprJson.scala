@@ -1,5 +1,7 @@
 package graft.expr
 
+import graft.Json
+
 /** Structural JSON serde for FExpr — the persisted model artifact stores
   * formulas structurally (not by re-parsing canonical names).
   * Format: ["n","p/q"] | ["v","sym"] | ["+",...] | ["*",...] |
@@ -9,72 +11,36 @@ object ExprJson {
 
   def toJson(e: FExpr): String = e match {
     case Num(r)    => s"""["n","${r.n}/${r.d}"]"""
-    case Var(s)    => s"""["v",${quote(s)}]"""
+    case Var(s)    => s"""["v",${Json.quote(s)}]"""
     case Add(as)   => as.map(toJson).mkString("""["+",""", ",", "]")
     case Mul(as)   => as.map(toJson).mkString("""["*",""", ",", "]")
     case Pow(b, x) => s"""["^",${toJson(b)},${toJson(x)}]"""
-    case Fn(k, a)  => s"""["f",${quote(k.fname)},${toJson(a)}]"""
+    case Fn(k, a)  => s"""["f",${Json.quote(k.fname)},${toJson(a)}]"""
   }
 
-  private def quote(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  def fromJson(s: String): FExpr = fromAst(Json.parse(s))
 
-  def fromJson(s: String): FExpr = new P(s).parseExpr()
-
-  /** Tiny recursive-descent parser for the array format above. */
-  private final class P(s: String) {
-    private var i = 0
-    private def ws(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
-    private def expect(c: Char): Unit = { ws(); require(s(i) == c, s"expected $c at $i in $s"); i += 1 }
-    private def parseString(): String = {
-      ws(); expect('"')
-      val sb = new StringBuilder
-      while (s(i) != '"') {
-        if (s(i) == '\\') {
-          i += 1
-          s(i) match {
-            case 'u' => sb += Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar; i += 4
-            case c   => sb += c
-          }
-        } else sb += s(i)
-        i += 1
-      }
-      i += 1
-      sb.toString
+  /** The format above as a parsed [[Json]] value. Sums and products are
+    * rebuilt through the raw constructors: the stored form is canonical.
+    */
+  def fromAst(v: Any): FExpr = v match {
+    case arr: Vector[_] if arr.nonEmpty => arr.head match {
+      case "n" =>
+        val Array(n, d) = arr(1).asInstanceOf[String].split('/')
+        Num(Rat.make(BigInt(n), BigInt(d)))
+      case "v" => Var(arr(1).asInstanceOf[String])
+      case "+" => Add(arr.tail.map(fromAst))
+      case "*" => Mul(arr.tail.map(fromAst))
+      case "^" => Pow(fromAst(arr(1)), fromAst(arr(2)))
+      case "f" =>
+        val k = arr(1) match {
+          case "exp" => Fk.Exp; case "log" => Fk.Log; case "sin" => Fk.Sin
+          case "cos" => Fk.Cos; case "Abs" => Fk.Abs
+          case other => throw new IllegalArgumentException(s"unknown fn $other")
+        }
+        Fn(k, fromAst(arr(2)))
+      case other => throw new IllegalArgumentException(s"unknown expr tag $other")
     }
-    def parseExpr(): FExpr = {
-      expect('[')
-      val tag = parseString()
-      val out = tag match {
-        case "n" =>
-          expect(',')
-          val Array(n, d) = parseString().split('/')
-          Num(Rat.make(BigInt(n), BigInt(d)))
-        case "v" => expect(','); Var(parseString())
-        case "+" | "*" =>
-          val args = Vector.newBuilder[FExpr]
-          ws()
-          while (s(i) == ',') { i += 1; args += parseExpr() }
-          val as = args.result()
-          // rebuild through raw constructors: stored form is already canonical
-          if (tag == "+") Add(as) else Mul(as)
-        case "^" =>
-          expect(','); val b = parseExpr(); expect(','); val e = parseExpr(); Pow(b, e)
-        case "f" =>
-          expect(','); val name = parseString(); expect(','); val a = parseExpr()
-          val k = name match {
-            case "exp" => Fk.Exp; case "log" => Fk.Log; case "sin" => Fk.Sin
-            case "cos" => Fk.Cos; case "Abs" => Fk.Abs
-          }
-          Fn(k, a)
-      }
-      expect(']')
-      out
-    }
+    case other => throw new IllegalArgumentException(s"not an expr array: $other")
   }
 }

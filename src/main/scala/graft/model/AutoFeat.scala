@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{NumericType, StringType}
 
-import graft.expr.{Compile, ExprJson, F, FExpr}
+import graft.expr.{Compile, F, FExpr}
 import graft.feateng.{FeatEng, FeatEngConfig}
 import graft.select.FeatSel
 import graft.stats.Gram
@@ -162,37 +162,7 @@ final case class AutoFeatModel(
     }
   }
 
-  def toJson: String = {
-    def arr(xs: Seq[String]) = xs.map(s => ExprJsonStr.q(s)).mkString("[", ",", "]")
-    val fj = formulas.map { case (k, v) => s"${ExprJsonStr.q(k)}:${ExprJson.toJson(v)}" }
-      .mkString("{", ",", "}")
-    val s2c = symToCol.map { case (k, v) => s"${ExprJsonStr.q(k)}:${ExprJsonStr.q(v)}" }
-      .mkString("{", ",", "}")
-    val pj = piGroups.map { case (n, ts) =>
-      s"""{"name":${ExprJsonStr.q(n)},"terms":${ts.map { case (c, e) => s"${ExprJsonStr.q(c)}:$e" }.mkString("{", ",", "}")}}"""
-    }.mkString("[", ",", "]")
-    val pt = if (classifier.isDefined || multiClassifier.isDefined) "classification" else "regression"
-    // Double.toString emits NaN / Infinity / -Infinity for non-finite
-    // values; the ModelJson parser accepts those spellings back, so a
-    // degenerate fit round-trips instead of failing at load time.
-    val multi = multiClassifier.map { mm =>
-      s""","classes":[${mm.classes.mkString(",")}],"interceptMulti":[${mm.intercept.mkString(",")}],
-         |"coefMulti":[${mm.coef.map(r => "[" + r.mkString(",") + "]").mkString(",")}]""".stripMargin
-    }.getOrElse("")
-    s"""{"originalColumns":${arr(originalColumns)},"categoricalCols":${arr(categoricalCols)},
-       |"feategCols":${arr(feategCols)},"symToCol":$s2c,"newFeatCols":${arr(newFeatCols)},
-       |"formulas":$fj,"goodCols":${arr(goodCols)},"piGroups":$pj,"allColumns":${arr(allColumns)},
-       |"problemType":"$pt"$multi,
-       |"coef":[${model.coef.mkString(",")}],"intercept":${model.intercept},"alpha":${model.alpha}}""".stripMargin
-  }
-}
-
-private object ExprJsonStr {
-  def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  def toJson: String = ModelJson.toJson(this)
 }
 
 object AutoFeatModel {

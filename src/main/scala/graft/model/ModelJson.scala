@@ -1,147 +1,64 @@
 package graft.model
 
-import graft.expr.{Add, FExpr, Fk, Fn, Mul, Num, Pow, Rat, Var}
+import graft.Json
+import graft.expr.ExprJson
 
-/** Loader side of the model-state sink: parses the JSON emitted by
-  * [[AutoFeatModel.toJson]] back into a servable [[AutoFeatModel]], so a
-  * fresh session (spark-submit serving job, different cluster) can
-  * `transform`/`predict`/`score` without refitting. No JSON library exists
-  * in the dependency set, so this is a minimal recursive-descent JSON
-  * parser (objects, arrays, strings, numbers) plus an AST→FExpr converter
-  * mirroring ExprJson's array format.
+/** The model-state sink: [[toJson]] writes an [[AutoFeatModel]] and
+  * [[fromJson]] reads it back into a servable model, so a fresh session
+  * (spark-submit serving job, different cluster) can
+  * `transform`/`predict`/`score` without refitting. Formulas use
+  * [[ExprJson]]'s array format; the codec is [[graft.Json]].
   */
 object ModelJson {
 
-  // ---------------------------------------------------------- generic JSON
-  /** Parsed JSON: String | Double | Boolean | Null | Vector[Any] |
-    * Vector[(String, Any)] (objects keep insertion order).
-    */
-  private final class P(s: String) {
-    private var i = 0
-    private def ws(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
-    private def expect(c: Char): Unit = { ws(); require(i < s.length && s(i) == c, s"expected $c at $i"); i += 1 }
-    private def peek(): Char = { ws(); s(i) }
-
-    def parseValue(): Any = peek() match {
-      case '{' => parseObj()
-      case '[' => parseArr()
-      case '"' => parseString()
-      case 't' => i += 4; true
-      case 'f' => i += 5; false
-      case 'n' => i += 4; null
-      // Double.toString spellings from toJson (degenerate fits): NaN,
-      // Infinity, -Infinity — dispatched here so they round-trip instead of
-      // failing at load with an opaque NumberFormatException
-      case 'N' => i += 3; Double.NaN
-      case 'I' => i += 8; Double.PositiveInfinity
-      case _ => parseNumber()
-    }
-
-    private def parseObj(): Vector[(String, Any)] = {
-      expect('{')
-      val out = Vector.newBuilder[(String, Any)]
-      if (peek() != '}') {
-        var more = true
-        while (more) {
-          val k = parseString()
-          expect(':')
-          out += (k -> parseValue())
-          if (peek() == ',') i += 1 else more = false
-        }
-      }
-      expect('}')
-      out.result()
-    }
-
-    private def parseArr(): Vector[Any] = {
-      expect('[')
-      val out = Vector.newBuilder[Any]
-      if (peek() != ']') {
-        var more = true
-        while (more) {
-          out += parseValue()
-          if (peek() == ',') i += 1 else more = false
-        }
-      }
-      expect(']')
-      out.result()
-    }
-
-    private def parseString(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (s(i) != '"') {
-        if (s(i) == '\\') {
-          i += 1
-          s(i) match {
-            case 'u' => sb += Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar; i += 4
-            case 'n' => sb += '\n'
-            case 't' => sb += '\t'
-            case c => sb += c
-          }
-        } else sb += s(i)
-        i += 1
-      }
-      i += 1
-      sb.toString
-    }
-
-    private def parseNumber(): Double = {
-      ws()
-      if (s.startsWith("-Infinity", i)) { i += 9; return Double.NegativeInfinity }
-      val start = i
-      while (i < s.length && "+-.eE0123456789".indexOf(s(i)) >= 0) i += 1
-      s.substring(start, i).toDouble
-    }
+  def toJson(m: AutoFeatModel): String = {
+    def arr(xs: Seq[String]) = xs.map(Json.quote).mkString("[", ",", "]")
+    val fj = m.formulas.map { case (k, v) => s"${Json.quote(k)}:${ExprJson.toJson(v)}" }
+      .mkString("{", ",", "}")
+    val s2c = m.symToCol.map { case (k, v) => s"${Json.quote(k)}:${Json.quote(v)}" }
+      .mkString("{", ",", "}")
+    val pj = m.piGroups.map { case (n, ts) =>
+      s"""{"name":${Json.quote(n)},"terms":${ts.map { case (c, e) => s"${Json.quote(c)}:$e" }.mkString("{", ",", "}")}}"""
+    }.mkString("[", ",", "]")
+    val pt = if (m.classifier.isDefined || m.multiClassifier.isDefined) "classification" else "regression"
+    // Double.toString emits NaN / Infinity / -Infinity for non-finite
+    // values; the parser accepts those spellings back, so a degenerate fit
+    // round-trips instead of failing at load time.
+    val multi = m.multiClassifier.map { mm =>
+      s""","classes":[${mm.classes.mkString(",")}],"interceptMulti":[${mm.intercept.mkString(",")}],
+         |"coefMulti":[${mm.coef.map(r => "[" + r.mkString(",") + "]").mkString(",")}]""".stripMargin
+    }.getOrElse("")
+    s"""{"originalColumns":${arr(m.originalColumns)},"categoricalCols":${arr(m.categoricalCols)},
+       |"feategCols":${arr(m.feategCols)},"symToCol":$s2c,"newFeatCols":${arr(m.newFeatCols)},
+       |"formulas":$fj,"goodCols":${arr(m.goodCols)},"piGroups":$pj,"allColumns":${arr(m.allColumns)},
+       |"problemType":"$pt"$multi,
+       |"coef":[${m.model.coef.mkString(",")}],"intercept":${m.model.intercept},"alpha":${m.model.alpha}}""".stripMargin
   }
 
-  // --------------------------------------------------- FExpr from JSON AST
-  /** ExprJson array format ["n","p/q"] | ["v",sym] | ["+",…] | ["*",…] |
-    * ["^",b,e] | ["f",name,arg], parsed generically.
-    */
-  private def exprFromAst(v: Any): FExpr = v match {
-    case arr: Vector[_] => arr.head match {
-      case "n" =>
-        val Array(n, d) = arr(1).asInstanceOf[String].split('/')
-        Num(Rat.make(BigInt(n), BigInt(d)))
-      case "v" => Var(arr(1).asInstanceOf[String])
-      case "+" => Add(arr.tail.map(exprFromAst).toVector)
-      case "*" => Mul(arr.tail.map(exprFromAst).toVector)
-      case "^" => Pow(exprFromAst(arr(1)), exprFromAst(arr(2)))
-      case "f" =>
-        val k = arr(1).asInstanceOf[String] match {
-          case "exp" => Fk.Exp; case "log" => Fk.Log; case "sin" => Fk.Sin
-          case "cos" => Fk.Cos; case "Abs" => Fk.Abs
-          case other => throw new IllegalArgumentException(s"unknown fn $other")
-        }
-        Fn(k, exprFromAst(arr(2)))
-      case other => throw new IllegalArgumentException(s"unknown expr tag $other")
-    }
-    case other => throw new IllegalArgumentException(s"not an expr array: $other")
-  }
-
-  // -------------------------------------------------------------- the model
   def fromJson(json: String): AutoFeatModel = {
-    val fields = new P(json).parseValue().asInstanceOf[Vector[(String, Any)]].toMap
+    val fields = Json.parse(json).asInstanceOf[Vector[(String, Any)]].toMap
+    def dbl(v: Any): Double = v match {
+      case l: Long => l.toDouble
+      case d => d.asInstanceOf[Double]
+    }
+    def dbls(v: Any): Array[Double] = v.asInstanceOf[Vector[_]].map(dbl).toArray
     def strs(k: String): Seq[String] =
       fields(k).asInstanceOf[Vector[_]].map(_.asInstanceOf[String])
     def strMap(k: String): Vector[(String, String)] =
       fields(k).asInstanceOf[Vector[(String, Any)]].map { case (a, b) => a -> b.asInstanceOf[String] }
     val formulas = fields("formulas").asInstanceOf[Vector[(String, Any)]]
-      .map { case (n, ast) => n -> exprFromAst(ast) }.toMap
-    val coef = fields("coef").asInstanceOf[Vector[_]].map(_.asInstanceOf[Double]).toArray
-    val intercept = fields("intercept").asInstanceOf[Double]
-    val alpha = fields("alpha").asInstanceOf[Double]
+      .map { case (n, ast) => n -> ExprJson.fromAst(ast) }.toMap
+    val coef = dbls(fields("coef"))
+    val intercept = dbl(fields("intercept"))
+    val alpha = dbl(fields("alpha"))
     val goodCols = strs("goodCols")
     val piGroups = fields("piGroups").asInstanceOf[Vector[_]].map { g =>
       val m = g.asInstanceOf[Vector[(String, Any)]].toMap
       (m("name").asInstanceOf[String],
         m("terms").asInstanceOf[Vector[(String, Any)]]
-          .map { case (c, e) => c -> e.asInstanceOf[Double] })
+          .map { case (c, e) => c -> dbl(e) })
     }
     val problemType = fields.get("problemType").map(_.asInstanceOf[String]).getOrElse("regression")
-    def dbls(v: Any): Array[Double] =
-      v.asInstanceOf[Vector[_]].map(_.asInstanceOf[Double]).toArray
     val multiClassifier = fields.get("classes").map { cs =>
       graft.select.Logistic.MultiModel(goodCols, dbls(cs).toSeq,
         fields("coefMulti").asInstanceOf[Vector[_]].map(dbls).toArray,

@@ -363,9 +363,16 @@ object FeatSel {
       } else Nil
     val scaled = Scaling.scaled(df, scaledCols, Scaling.stats(df, scaledCols), targetAndWeight: _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nTotal = scaled.count()
-    if (nTotal == 0) scaled.unpersist()
-    require(nTotal > 0, NoRows)
+    // one job counts all rows and the rows Gram.compute keeps (no null/NaN
+    // feature or target, a positive weight): rows that are all dirty must
+    // fail like the driver regime, not select nothing
+    val finite = (v: Column) => v.isNotNull && !isnan(v)
+    val clean = forall(array((featureCols :+ targetCol).map(q(_).cast("double")): _*), finite) &&
+      weightCol.fold(lit(true))(w => finite(q(w)) && q(w) > 0)
+    val counts = scaled.agg(count(lit(1)), count(when(clean, 1))).head()
+    val nTotal = counts.getLong(0)
+    if (counts.getLong(1) == 0) scaled.unpersist()
+    require(counts.getLong(1) > 0, NoRows)
     val d = featureCols.size
 
     val selectedLists = mapRuns(math.max(0, cfg.featselRuns), cfg.nJobs) { run =>

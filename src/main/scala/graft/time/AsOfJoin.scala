@@ -35,13 +35,15 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, MapType}
   */
 object AsOfJoin {
 
+  private def q(c: String): Column = col(s"`${c.replace("`", "``")}`")
+
   /** Numeric view of a ts column for range comparisons: TIMESTAMP_NTZ has
     * no direct double cast (ANSI), so it routes through TIMESTAMP (session
     * tz — pinned to UTC by this library's sessions); everything else casts
     * directly.
     */
   private def tsDouble(df: DataFrame, tsCol: String): Column = {
-    val c = col(s"`${tsCol.replace("`", "``")}`")
+    val c = q(tsCol)
     df.schema(tsCol).dataType match {
       case org.apache.spark.sql.types.TimestampNTZType => c.cast("timestamp").cast("double")
       case _ => c.cast("double")
@@ -57,8 +59,8 @@ object AsOfJoin {
     if (keys.isEmpty || salts <= 1) return Map.empty
     val keyType = left.schema(keyCol).dataType
     def side(df: DataFrame) = df
-      .filter(col(keyCol).isin(keys.map(k => lit(k).cast(keyType)): _*))
-      .select(col(keyCol).as("__k"), tsDouble(df, tsCol).as("__t"))
+      .filter(q(keyCol).isin(keys.map(k => lit(k).cast(keyType)): _*))
+      .select(q(keyCol).as("__k"), tsDouble(df, tsCol).as("__t"))
     val pcts = array((1 until salts).map(i => lit(i.toDouble / salts)): _*)
     side(left).union(side(right))
       .groupBy("__k")
@@ -124,7 +126,6 @@ object AsOfJoin {
     val skewedKeys = leftSkewedAll.filterNot(rightHeavy.toSet)
     val salted = skewedKeys.nonEmpty || rightHeavy.nonEmpty
 
-    def q(c: String) = col(s"`${c.replace("`", "``")}`")
     val key = q(keyCol)
     // skew keys arrive as strings; each is cast ONCE to the key's own type
     val nativeKeys = (ks: Seq[String]) => ks.map(k => lit(k).cast(keyType))
@@ -218,7 +219,7 @@ object AsOfJoin {
     * strings (the cast runs on the aggregated keys only).
     */
   private def topKeys(df: DataFrame, keyCol: String, threshold: Long): Seq[String] =
-    df.groupBy(col(keyCol).as("__k")).count()
+    df.groupBy(q(keyCol).as("__k")).count()
       .filter(col("count") > threshold)
       .orderBy(desc("count")).limit(1000)
       .select(col("__k").cast("string"))

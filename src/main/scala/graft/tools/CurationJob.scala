@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Json
 import graft.ckpt.Checkpoint
 import graft.pipeline.{Dedup, Pack, TextOps}
 
@@ -50,7 +51,7 @@ object CurationJob {
     val spark = Sessions.job("graft-curation-job")
     val docs = spark.read.parquet(input)
     val manifests = run(docs, outDir, nBuckets, seqLen, lineageInput = input)
-    println(s"""{"buckets":$nBuckets,"rows":${manifests.map(_.rows).sum},"outDir":"$outDir"}""")
+    println(s"""{"buckets":$nBuckets,"rows":${manifests.map(_.rows).sum},"outDir":${Json.quote(outDir)}}""")
     spark.stop()
   }
 }

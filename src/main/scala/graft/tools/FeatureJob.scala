@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.Json
 import graft.ckpt.Checkpoint
 import graft.time.{PointInTime, TranscriptGen}
 
@@ -34,7 +35,7 @@ object FeatureJob {
     val manifests = Checkpoint.writeResumable(out, outDir, "conv_id", nBuckets,
       lineage = s"input=$input|op=pit_base_features|v=1")
     val totalRows = manifests.map(_.rows).sum
-    println(s"""{"buckets":$nBuckets,"rows":$totalRows,"outDir":"$outDir"}""")
+    println(s"""{"buckets":$nBuckets,"rows":$totalRows,"outDir":${Json.quote(outDir)}}""")
     spark.stop()
   }
 }

@@ -55,4 +55,39 @@ class CheckpointSpec extends SparkSpec {
     Checkpoint.writeResumable(out, dir, "conv_id", 4, "L")
     assert(Files.walk(Paths.get(dir)).count() == before)
   }
+
+  private def snapshot(dir: String): Map[String, Seq[Byte]] =
+    Files.walk(Paths.get(dir)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(Files.isRegularFile(_)).map(f => f.toString -> Files.readAllBytes(f).toSeq).toMap
+
+  test("resume refuses a foreign lineage and leaves every file untouched") {
+    val dir = tmpDir()
+    // JSON metacharacters and a glob's `{a,b}`: the manifest must escape them
+    // on write and read them back whole
+    val a = "input=/data/{2024,2025}|q=\"x\\y\"\t|v=1"
+    val clean = Checkpoint.writeResumable(out, dir, "conv_id", 4, a)
+    assert(clean.forall(_.lineage == a))
+    // bucket 1 loses its manifest, as a crash before it was written would:
+    // a resume would clear that bucket's data first
+    Files.delete(Paths.get(s"$dir/_manifest_part_1.json"))
+    val before = snapshot(dir)
+    val e = intercept[IllegalStateException] {
+      Checkpoint.writeResumable(out, dir, "conv_id", 4, "input=/data/{2026}|v=1")
+    }
+    Seq(dir, "part 0", "/data/{2024,2025}", "/data/{2026}").foreach(w =>
+      assert(e.getMessage.contains(w), s"'$w' missing from: ${e.getMessage}"))
+    assert(snapshot(dir) == before, "a refused resume changed files")
+    // the original lineage still resumes
+    assert(Checkpoint.writeResumable(out, dir, "conv_id", 4, a) == clean)
+  }
+
+  test("a dotted key column buckets by the column, not a struct field") {
+    val dir = tmpDir()
+    val dotted = out.withColumnRenamed("conv_id", "user.id")
+    val m = Checkpoint.writeResumable(dotted, dir, "user.id", 4, "L")
+    val plain = Checkpoint.writeResumable(out, tmpDir(), "conv_id", 4, "L")
+    assert(m.map(x => (x.part, x.rows)) == plain.map(x => (x.part, x.rows)))
+    val back = Checkpoint.read(spark, dir)
+    assert(back.columns.contains("user.id") && back.exceptAll(dotted).count() == 0)
+  }
 }

@@ -136,11 +136,19 @@ class FeatSelSpec extends SparkSpec {
   test("an empty frame fails loudly in both regimes") {
     for (d <- Seq(20, 481)) {
       val (frame, names, _) = planted(d, 20)
-      val e = intercept[IllegalArgumentException] {
-        FeatSel.selectFeatures(frame.filter(lit(false)), names, "y", cfg2)
+      val (dirty, _, _) = planted(d, 300)
+      // 300 rows, one null per row: row r nulls feature r % d
+      val rowId = row_number().over(org.apache.spark.sql.expressions.Window.orderBy(col("w0"))) - 1
+      val oneNullPerRow = dirty.withColumn("__r", rowId).select(names.zipWithIndex.map { case (c, j) =>
+        when(col("__r") % d =!= j, col(c)).as(c) } :+ col("y"): _*)
+      for ((name, input) <- Seq("empty" -> frame.filter(lit(false)), "one null per row" -> oneNullPerRow)) {
+        val e = intercept[IllegalArgumentException] {
+          FeatSel.selectFeatures(input, names, "y", cfg2)
+        }
+        assert(e.getMessage.contains("no clean rows"), s"d = $d, $name: ${e.getMessage}")
       }
-      assert(e.getMessage.contains("no clean rows"), s"d = $d: ${e.getMessage}")
       frame.unpersist()
+      dirty.unpersist()
     }
   }
 }

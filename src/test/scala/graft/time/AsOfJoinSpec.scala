@@ -148,6 +148,27 @@ class AsOfJoinSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(cnts.forall(c => c > 450 && c < 1100), cnts.toString)
   }
 
+  test("a dotted key name runs the skew detection scans as a column, not a struct field") {
+    val rng = new scala.util.Random(41)
+    // distinct right ts -> a deterministic payload pick on every path; "hot"
+    // is heavy on both sides, so each scan salts it
+    val rTs = rng.shuffle((0 until 100000).toVector).take(800)
+    val right = (rTs.zipWithIndex.map { case (t, i) =>
+      (if (i < 600) "hot" else s"k${i % 4}", ts(t.toLong), i.toDouble) }).toDF("user.id", "ts", "v")
+    val left = ((0 until 400).map(_ => ("hot", ts(rng.nextInt(100000).toLong))) ++
+      (0 until 200).map(_ => (s"k${rng.nextInt(4)}", ts(rng.nextInt(100000).toLong)))).toDF("user.id", "ts")
+    def g(df: DataFrame) = df.groupBy("`user.id`", "ts").agg(sort_array(collect_list("asof_v")).as("vs"))
+    val plain = g(AsOfJoin.asof(left, right, "user.id", "ts", Seq("v"), skewKeys = Some(Nil)))
+    val leftScan = AsOfJoin.asof(left, right, "user.id", "ts", Seq("v"),
+      skewKeys = None, skewThreshold = 100L, salts = 4)
+    val rightScan = AsOfJoin.asof(left, right, "user.id", "ts", Seq("v"),
+      skewKeys = Some(Nil), rightSkewKeys = None, skewThreshold = 100L, salts = 4)
+    for ((name, got) <- Seq("skewKeys = None" -> leftScan, "rightSkewKeys = None" -> rightScan)) {
+      assert(exchangeKeys(got).contains(Seq("user.id", "__salt")), s"$name did not salt")
+      assert(g(got).exceptAll(plain).count() == 0 && plain.exceptAll(g(got)).count() == 0, name)
+    }
+  }
+
   test("forward direction matches a forward window oracle, ties included") {
     val rng = new scala.util.Random(33)
     val left = (0 until 500).map(_ =>

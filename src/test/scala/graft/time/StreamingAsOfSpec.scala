@@ -46,21 +46,26 @@ class StreamingAsOfSpec extends SparkSpec {
     val r = rightRows.toDF("k", "ts", "v")
     val expected = normalize(AsOfJoin.asof(l, r, "k", "ts", Seq("v"), skewKeys = Some(Nil)))
 
+    // both sides come from ONE source: each phase is one addData, i.e. one
+    // offset range, so a micro-batch always holds a phase's left rows
+    // together with its right rows (two sources fed by two addData calls
+    // let a batch take one side's rows before the other's)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val lSrc = MemoryStream[(String, Timestamp)]
-    val rSrc = MemoryStream[(String, Timestamp, Double)]
+    val src = MemoryStream[(Boolean, String, Timestamp, Double)]
+    val tagged = src.toDS().toDF("isRight", "k", "ts", "v")
     val out = StreamingAsOf.asof(
-      lSrc.toDS().toDF("k", "ts"), rSrc.toDS().toDF("k", "ts", "v"),
+      tagged.filter(!col("isRight")).select("k", "ts"), tagged.filter(col("isRight")).select("k", "ts", "v"),
       "k", "ts", Seq("v"), watermark = "10000 hours")
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName("streamasof").start()
     // event-time-ordered feed split mid-timeline: state must carry over
     val cut = 120L
-    lSrc.addData(leftRows.filter(_._2.getTime <= cut * 1000))
-    rSrc.addData(rightRows.filter(_._2.getTime <= cut * 1000))
+    def phase(keep: Long => Boolean) = src.addData(
+      leftRows.filter(r => keep(r._2.getTime)).map { case (k, t) => (false, k, t, 0.0) } ++
+        rightRows.filter(r => keep(r._2.getTime)).map { case (k, t, v) => (true, k, t, v) })
+    phase(_ <= cut * 1000)
     q.processAllAvailable()
-    lSrc.addData(leftRows.filter(_._2.getTime > cut * 1000))
-    rSrc.addData(rightRows.filter(_._2.getTime > cut * 1000))
+    phase(_ > cut * 1000)
     q.processAllAvailable()
     q.stop()
     val got = normalize(spark.sql("SELECT k, ts, asof_v FROM streamasof"))
