@@ -14,11 +14,12 @@ import graft.expr.{F, FExpr, Var}
   * finite/variance/parent-correlation acceptance filters, symbolic dedup by
   * canonical name, and final structural pruning.
   *
-  * Physical shape per wave: (a) ONE chunked aggregate job computing the
-  * guards (min/max/zero-count/≤2-distinct) for every input feature, (b) one
-  * wide `select` materializing all candidate columns as float32 (whole-stage
-  * codegen; shuffle-free), (c) ONE chunked aggregate job computing the
-  * finite/variance/corr acceptance stats for every candidate. All planning
+  * Physical shape per wave: (a) ONE `DetReduce` pass computing the guards
+  * (min/max/zero-count/≤2-distinct) for every input feature, (b) one wide
+  * `select` materializing the candidate columns as float32 (whole-stage
+  * codegen; shuffle-free), (c) ONE `DetReduce` pass computing the
+  * finite/variance/corr acceptance stats for every candidate; (b) and (c)
+  * repeat per batch of at most `WaveBatch` candidates. All planning
   * decisions happen on the driver. At 10^12-row scale this runs on the
   * admission-controlled subsample (autofeat.py:321-344); only the winning
   * features are ever evaluated on the full table.
@@ -29,11 +30,6 @@ import graft.expr.{F, FExpr, Var}
 final case class FeatEngConfig(
     maxSteps: Int = 2,
     transformations: Seq[String] = FeatEng.defaultTransformations,
-    aggChunkSize: Int = 300,
-    /** Max candidate columns materialized per wave frame: bounds plan width,
-      * codegen size, and cache footprint for wide steps.
-      */
-    waveBatch: Int = 1500,
     /** Per-start-column dimensions (reference `units=`, feateng.py:115-118):
       * when non-empty, dimensionally-illegal transforms/combinations are
       * vetoed before entering the pool (feateng.py:245-250, 314-319).
@@ -55,9 +51,14 @@ final case class EngineeredFrame(
 object FeatEng {
   val defaultTransformations: Seq[String] = Seq("1/", "exp", "log", "abs", "sqrt", "^2", "^3")
 
+  /** Max candidate columns materialized per wave frame: bounds plan width,
+    * codegen size, and cache footprint for wide steps.
+    */
+  private val WaveBatch = 1500
+
   private def q(c: String): Column = col(s"`${c.replace("`", "``")}`")
 
-  /** Per-feature guard statistics (one pass A + one pass B, chunked). */
+  /** Per-feature guard statistics (one `DetReduce` pass per wave). */
   private final case class GStats(min: Double, max: Double, zeros: Long, le2distinct: Boolean)
 
   /** Guard predicates (feateng.py:194-208), evaluated on driver from GStats. */
@@ -106,9 +107,6 @@ object FeatEng {
       case "y-x" => y - x
     }
   }
-
-  private def chunked[T](xs: Seq[T], size: Int): Seq[Seq[T]] =
-    xs.grouped(size).toSeq
 
   /** Wave acceptance-statistics accumulator. Top-level on purpose: an inner
     * class would capture the enclosing scope (frames, pools) in `$outer`
@@ -172,7 +170,7 @@ final class FeatEng(cfg: FeatEngConfig = FeatEngConfig()) {
     def nameOf(expr: FExpr): String = expr.name
 
     // ---------------------------------------------------------- guards
-    // ONE single-pass tree-reduced RDD job — NOT chunked SQL aggregates:
+    // ONE single-pass DetReduce RDD job — NOT chunked SQL aggregates:
     // hundreds of aggregate expressions per job cost seconds of driver
     // analysis/codegen each, and a wave needs stats for thousands of
     // features. The pass tracks min/max/zeros AND up to 3 distinct non-NaN
@@ -250,14 +248,14 @@ final class FeatEng(cfg: FeatEngConfig = FeatEngConfig()) {
       * Each candidate: (name, column, parents).
       */
     def acceptWave(all: Seq[(String, Column, Seq[String])]): Seq[(String, Boolean)] =
-      chunked(all, cfg.waveBatch).flatMap(acceptBatch)
+      all.grouped(WaveBatch).toSeq.flatMap(acceptBatch)
 
     def acceptBatch(cands: Seq[(String, Column, Seq[String])]): Seq[(String, Boolean)] = {
       if (cands.isEmpty) return Nil
       val waveDf = df.select(dfCols.map(q) ++ passThrough.map(q) ++
         cands.map { case (n, c, _) => c.cast("float").as(n) }: _*)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      // Acceptance stats in ONE tree-reduced pass over the materialized wave
+      // Acceptance stats in ONE DetReduce pass over the materialized wave
       // frame: parent moments + per-candidate (bad, Σx, Σx², Σx·parent).
       // A chunked-SQL-aggregate formulation costs seconds of driver
       // analysis/codegen per ~100 candidates; this is a single job however

@@ -460,7 +460,8 @@ object FeatSel {
     x.foreach(scaleInPlace)
     val (y, w) =
       if (isClf) {
-        val (w0, w1) = LogisticLasso.balancedWeights(n, yRaw.count(_ > 0.5).toDouble)
+        val nPos = yRaw.count(_ > 0.5).toLong
+        val Array(w0, w1) = LogisticLasso.balancedWeights(Array(n - nPos, nPos))
         (yRaw.map(v => v * 4.0 - 2.0), yRaw.map(v => if (v > 0.5) w1 else w0))
       } else {
         val yc = yRaw.clone(); scaleInPlace(yc); (yc, Array.fill(n)(1.0))

@@ -1,16 +1,20 @@
 package graft.select
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
-/** Distributed binary logistic regression via Newton-IRLS: each iteration is
-  * ONE ordered-reduce pass (stats.DetReduce) computing the gradient X'(y-p)
-  * and Hessian X'WX with the current coefficients broadcast in the task
-  * closure (d is the small post-selection feature count, so the d² buffer
-  * is tiny). Supports
-  * sklearn-style "balanced" class weights (reference final classifier,
-  * autofeat.py:398: LogisticRegressionCV(class_weight="balanced")) and an
-  * L2 ridge for conditioning.
+import graft.stats.Scaling
+
+/** Distributed logistic final models (reference final classifier,
+  * autofeat.py:398: LogisticRegressionCV(class_weight="balanced")): the
+  * binary sigmoid [[fit]] and the multinomial softmax [[fitMulti]]. Both
+  * run ONE Newton-IRLS loop ([[newton]]): each iteration is one
+  * ordered-reduce pass (stats.DetReduce) computing the gradient and
+  * Hessian with the current coefficients broadcast in the task closure (d
+  * is the small post-selection feature count, so the buffers are tiny),
+  * then an L2-ridged, step-damped Newton update. The two fits differ only
+  * in their per-row gradient/Hessian kernel and their model class.
   */
 object Logistic {
 
@@ -62,28 +66,221 @@ object Logistic {
     }
   }
 
-  /** NaN-aware per-feature mean / population-std over `data`'s columns
-    * 1..d-1 (column 0 = label), for the internal standardization both fits
-    * share; zero/NaN std falls back to 1 (constant columns pass through).
+  /** Ridge on every non-intercept coefficient (the intercepts get 1e-12). */
+  private val L2 = 1e-6
+
+  /** Sorted distinct label values (one small aggregate). */
+  def distinctClasses(df: DataFrame, labelCol: String): Seq[Double] =
+    df.select(col(s"`${labelCol.replace("`", "``")}`").cast("double").as("__y"))
+      .where(col("__y").isNotNull && !isnan(col("__y")))
+      .distinct().collect().map(_.getDouble(0)).sorted.toSeq
+
+  /** Multinomial softmax fit via full Newton: the (K-1)(d+1) gradient and
+    * its square Hessian (block (k,l) = X' diag(w·p_k(δ_kl − p_l)) X), 20
+    * iterations. Rows whose label is not one of `classes` are skipped.
+    * Balanced weights w_c = n/(K·n_c) match sklearn class_weight="balanced".
     */
-  private def columnStats(data: DataFrame, d: Int): (Array[Double], Array[Double]) = {
-    val statRow = data.agg(
-      count(lit(1)).as("__n"),
-      (1 until d).flatMap { i =>
-        val name = data.columns(i)
-        val c = col(s"`${name.replace("`", "``")}`").cast("double")
-        val cl = when(isnan(c), lit(null)).otherwise(c)
-        Seq(avg(cl), stddev_pop(cl))
-      }: _*).collect()(0)
-    val mu = Array.tabulate(d - 1) { i =>
-      val v = statRow.get(1 + 2 * i); if (v == null) 0.0 else v.asInstanceOf[Double]
+  def fitMulti(df: DataFrame, featureCols: Seq[String], labelCol: String,
+               classes: Seq[Double], balanced: Boolean = true): MultiModel = {
+    val k = classes.size
+    val km = k - 1
+    val d = featureCols.size + 1 // + intercept, per block
+    val kernel = () => new RowKernel {
+      private val m = new Array[Double](k)
+      private val pr = new Array[Double](k)
+      def add(b: Array[Double], x: Array[Double], y: Double, ci: Int, w: Double,
+              g: Array[Double], h: Array[Array[Double]]): Unit = {
+        // softmax with max-subtraction
+        var mMax = 0.0
+        var kk = 0
+        var i = 0
+        while (kk < km) {
+          var s = 0.0
+          i = 0
+          while (i < d) { s += b(kk * d + i) * x(i); i += 1 }
+          m(kk) = s
+          if (s > mMax) mMax = s
+          kk += 1
+        }
+        m(km) = 0.0
+        var denom = 0.0
+        kk = 0
+        while (kk < k) { pr(kk) = math.exp(m(kk) - mMax); denom += pr(kk); kk += 1 }
+        kk = 0
+        while (kk < k) { pr(kk) /= denom; kk += 1 }
+        // gradient blocks: w (1{ci=k} - p_k) x
+        kk = 0
+        while (kk < km) {
+          val gs = w * ((if (ci == kk) 1.0 else 0.0) - pr(kk))
+          i = 0
+          while (i < d) { g(kk * d + i) += gs * x(i); i += 1 }
+          kk += 1
+        }
+        // hessian blocks (k,l): w p_k (δ_kl - p_l) x x'
+        kk = 0
+        while (kk < km) {
+          var ll = 0
+          while (ll < km) {
+            val hs = w * pr(kk) * ((if (kk == ll) 1.0 else 0.0) - pr(ll))
+            if (hs != 0.0) {
+              i = 0
+              while (i < d) {
+                val v = hs * x(i)
+                var j = 0
+                while (j < d) { h(kk * d + i)(ll * d + j) += v * x(j); j += 1 }
+                i += 1
+              }
+            }
+            ll += 1
+          }
+          kk += 1
+        }
+      }
     }
-    val sd = Array.tabulate(d - 1) { i =>
-      val v = statRow.get(2 + 2 * i)
-      val s = if (v == null) 0.0 else v.asInstanceOf[Double]
-      if (s > 0 && !s.isNaN) s else 1.0
+    val (coef, b0) = newton("Logistic.fitMulti", df, featureCols, labelCol, Some(classes),
+      balanced, iters = 20, kernel)
+    MultiModel(featureCols, classes, coef, b0)
+  }
+
+  /** Binary sigmoid fit on double feature columns and a 0/1 label column
+    * (a label above 0.5 is the positive class), 12 Newton iterations.
+    */
+  def fit(df: DataFrame, featureCols: Seq[String], labelCol: String,
+          balanced: Boolean = true): Model = {
+    val kernel = () => new RowKernel {
+      def add(b: Array[Double], x: Array[Double], y: Double, ci: Int, w: Double,
+              g: Array[Double], h: Array[Array[Double]]): Unit = {
+        val d = x.length
+        var m = 0.0
+        var i = 0
+        while (i < d) { m += b(i) * x(i); i += 1 }
+        val p = 1.0 / (1.0 + math.exp(-m))
+        val gscale = w * (y - p)
+        val hscale = w * p * (1.0 - p)
+        i = 0
+        while (i < d) {
+          g(i) += gscale * x(i)
+          var j = 0
+          while (j < d) { h(i)(j) += hscale * x(i) * x(j); j += 1 }
+          i += 1
+        }
+      }
     }
-    (mu, sd)
+    val (coef, b0) = newton("Logistic.fit", df, featureCols, labelCol, None,
+      balanced, iters = 12, kernel)
+    Model(featureCols, coef(0), b0(0))
+  }
+
+  /** One fit's per-row arithmetic: `add` accumulates into `g`/`h` the
+    * gradient and Hessian, at coefficients `b`, of a row that passed the
+    * row rule. `x` is the standardized row with x(0) = 1, `y` its label,
+    * `ci` its class index and `w` that class's weight. Each partition gets
+    * its own instance, so it may keep scratch buffers.
+    */
+  private abstract class RowKernel {
+    def add(b: Array[Double], x: Array[Double], y: Double, ci: Int, w: Double,
+            g: Array[Double], h: Array[Array[Double]]): Unit
+  }
+
+  /** The Newton loop both fits share; returns the K-1 coefficient blocks
+    * and intercepts in original feature units.
+    *
+    * Row rule: the label and every feature are non-null and finite, and
+    * with `classes` given (softmax) the label is one of them. Rows that
+    * fail it are dropped before anything is computed, so class counts,
+    * standardization and every Newton pass see the same rows; with no row
+    * left the fit throws IllegalArgumentException naming `fit`. Without
+    * `classes` (sigmoid) a label above 0.5 is class 1, else class 0.
+    *
+    * Engineered features span many orders of magnitude (x^3·y^3 vs
+    * log x), and Newton on the raw scale can overshoot into non-finite
+    * coefficients, so the loop fits on z = (x−μ)/σ, damps each step
+    * ([[dampedAdd]]) and de-transforms exactly afterwards: serving columns
+    * are unaffected.
+    */
+  private def newton(fit: String, df: DataFrame, featureCols: Seq[String], labelCol: String,
+                     classes: Option[Seq[Double]], balanced: Boolean, iters: Int,
+                     kernel: () => RowKernel): (Array[Array[Double]], Array[Double]) = {
+    val d = featureCols.size + 1 // + intercept, per block
+    val k = classes.fold(2)(_.size)
+    require(k >= 2, s"[$fit] need >= 2 classes, got ${classes.get}")
+    val km = k - 1
+    val p = km * d
+    val q = (c: String) => col(s"`${c.replace("`", "``")}`").cast("double")
+    val finite = (c: Column) => c.isNotNull && !isnan(c) && abs(c) =!= lit(Double.PositiveInfinity)
+    val y = q(labelCol)
+    val rule = (labelCol +: featureCols).map(c => finite(q(c))).reduce(_ && _) &&
+      classes.fold(lit(true))(cs => y.isin(cs: _*))
+    val data = df.select((labelCol +: featureCols).map(q): _*).where(rule)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val classIndex: Double => Int = classes.map(_.toArray) match {
+      case Some(cs) => v => cs.indexWhere(_ == v)
+      case None => v => if (v > 0.5) 1 else 0
+    }
+    val counts = new Array[Long](k)
+    data.groupBy(y).count().collect().foreach(r => counts(classIndex(r.getDouble(0))) += r.getLong(1))
+    if (counts.sum == 0) {
+      data.unpersist()
+      throw new IllegalArgumentException(
+        s"[$fit] no clean rows: every row has a null or non-finite label or feature")
+    }
+    val w = if (balanced) LogisticLasso.balancedWeights(counts) else Array.fill(k)(1.0)
+    val st = Scaling.stats(data, featureCols)
+    val mu = st.mean
+    val sd = st.stdPop.map(Scaling.divisor)
+
+    val beta = new Array[Double](p)
+    for (_ <- 0 until iters) {
+      // InternalRow pass (toRdd, not .rdd): the cached frame is read through
+      // InMemoryTableScan without the deserializer boxing every double
+      val buffers = data.queryExecution.toRdd.mapPartitions { rows =>
+        val kern = kernel()
+        val g = new Array[Double](p)
+        val h = Array.ofDim[Double](p, p)
+        val x = new Array[Double](d)
+        x(0) = 1.0
+        rows.foreach { r =>
+          var i = 1
+          while (i < d) { x(i) = (r.getDouble(i) - mu(i - 1)) / sd(i - 1); i += 1 }
+          val yv = r.getDouble(0)
+          val ci = classIndex(yv)
+          kern.add(beta, x, yv, ci, w(ci), g, h)
+        }
+        Iterator.single((g, h))
+      }
+      // ordered merge (not treeReduce): deterministic double-sum order
+      val (grad, hess) = graft.stats.DetReduce.orderedReduce[(Array[Double], Array[Array[Double]])](
+        buffers,
+        { case ((g1, h1), (g2, h2)) =>
+          var i = 0
+          while (i < p) {
+            g1(i) += g2(i)
+            var j = 0
+            while (j < p) { h1(i)(j) += h2(i)(j); j += 1 }
+            i += 1
+          }
+          (g1, h1)
+        },
+        (new Array[Double](p), Array.ofDim[Double](p, p)))
+      // ridge on non-intercept entries (index % d != 0); solve H δ = grad − l2·β
+      var i = 0
+      while (i < p) {
+        if (i % d != 0) { grad(i) -= L2 * beta(i); hess(i)(i) += L2 }
+        else hess(i)(i) += 1e-12
+        i += 1
+      }
+      dampedAdd(beta, solve(hess, grad))
+    }
+    data.unpersist()
+    // de-standardize each block: coef_orig = coef_z / σ ; b0_orig = b0_z − Σ coef_z μ/σ
+    val coef = Array.tabulate(km)(kk => Array.tabulate(d - 1)(j => beta(kk * d + 1 + j) / sd(j)))
+    val b0 = Array.tabulate(km) { kk =>
+      var b0 = beta(kk * d)
+      var j = 0
+      while (j < d - 1) { b0 -= beta(kk * d + 1 + j) * mu(j) / sd(j); j += 1 }
+      b0
+    }
+    (coef, b0)
   }
 
   /** In-place damped Newton update: beta += step scaled so the step's
@@ -99,246 +296,6 @@ object Logistic {
     val scale = if (mx.isNaN || mx.isInfinite) 0.0 else if (mx > 10.0) 10.0 / mx else 1.0
     i = 0
     while (i < step.length) { beta(i) += scale * step(i); i += 1 }
-  }
-
-  /** Sorted distinct label values (one small aggregate). */
-  def distinctClasses(df: DataFrame, labelCol: String): Seq[Double] =
-    df.select(col(s"`${labelCol.replace("`", "``")}`").cast("double").as("__y"))
-      .where(col("__y").isNotNull && !isnan(col("__y")))
-      .distinct().collect().map(_.getDouble(0)).sorted.toSeq
-
-  /** Multinomial softmax fit via full Newton: each iteration is ONE
-    * distributed pass accumulating the (K-1)(d+1) gradient and its square
-    * Hessian (block (k,l) = X' diag(w·p_k(δ_kl − p_l)) X) with the current
-    * coefficients broadcast in the closure — d is the small post-selection
-    * feature count and K the class count, so the buffer stays tiny.
-    * Balanced weights w_c = n/(K·n_c) match sklearn class_weight="balanced".
-    */
-  def fitMulti(df: DataFrame, featureCols: Seq[String], labelCol: String,
-               classes: Seq[Double], balanced: Boolean = true,
-               l2: Double = 1e-6, iters: Int = 20): MultiModel = {
-    val k = classes.size
-    require(k >= 2, s"need >= 2 classes, got $classes")
-    val km = k - 1
-    val d = featureCols.size + 1 // + intercept, per block
-    val p = km * d
-    val data = df.select((labelCol +: featureCols)
-      .map(c => col(s"`${c.replace("`", "``")}`").cast("double")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lq = col(s"`${labelCol.replace("`", "``")}`").cast("double")
-    // null/NaN labels are skipped by the Newton pass below; skip them in
-    // the class counts too (a null-key group would NPE Row.getDouble)
-    val countRows = data.where(lq.isNotNull && !isnan(lq))
-      .groupBy(lq.as("__y")).agg(count(lit(1)).as("__n")).collect()
-    val nByClass = countRows.map(r => r.getDouble(0) -> r.getLong(1)).toMap
-    val n = nByClass.values.sum.toDouble
-    val clsArr = classes.toArray
-    val wByClass = clsArr.map(c =>
-      if (balanced) n / (k.toDouble * math.max(nByClass.getOrElse(c, 0L), 1L)) else 1.0)
-
-    // Internal standardization: engineered features span many orders of
-    // magnitude (x^3·y^3 vs log x), and Newton on the raw scale can
-    // overshoot into non-finite coefficients. Fit on z = (x−μ)/σ and
-    // de-transform exactly afterwards — the returned model is in ORIGINAL
-    // feature units, so serving columns are unaffected.
-    val (mu, sd) = columnStats(data, d)
-
-    var beta = new Array[Double](p)
-    for (_ <- 0 until iters) {
-      val b = beta
-      val buffers = data.queryExecution.toRdd.mapPartitions { rows =>
-        val g = new Array[Double](p)
-        val h = Array.ofDim[Double](p, p)
-        val x = new Array[Double](d)
-        val m = new Array[Double](k)
-        val pr = new Array[Double](k)
-        rows.foreach { r =>
-          var ok = !r.isNullAt(0)
-          val y = if (ok) r.getDouble(0) else 0.0
-          x(0) = 1.0
-          var i = 1
-          while (i < d && ok) {
-            if (r.isNullAt(i)) ok = false
-            else {
-              x(i) = (r.getDouble(i) - mu(i - 1)) / sd(i - 1)
-              if (x(i).isNaN) ok = false
-            }
-            i += 1
-          }
-          val ci = if (ok) java.util.Arrays.binarySearch(clsArr, y) else -1
-          if (ok && ci >= 0) {
-            // softmax with max-subtraction
-            var mMax = 0.0
-            var kk = 0
-            while (kk < km) {
-              var s = 0.0
-              i = 0
-              while (i < d) { s += b(kk * d + i) * x(i); i += 1 }
-              m(kk) = s
-              if (s > mMax) mMax = s
-              kk += 1
-            }
-            m(km) = 0.0
-            var denom = 0.0
-            kk = 0
-            while (kk < k) { pr(kk) = math.exp(m(kk) - mMax); denom += pr(kk); kk += 1 }
-            kk = 0
-            while (kk < k) { pr(kk) /= denom; kk += 1 }
-            val w = wByClass(ci)
-            // gradient blocks: w (1{ci=k} - p_k) x
-            kk = 0
-            while (kk < km) {
-              val gs = w * ((if (ci == kk) 1.0 else 0.0) - pr(kk))
-              i = 0
-              while (i < d) { g(kk * d + i) += gs * x(i); i += 1 }
-              kk += 1
-            }
-            // hessian blocks (k,l): w p_k (δ_kl - p_l) x x'
-            kk = 0
-            while (kk < km) {
-              var ll = 0
-              while (ll < km) {
-                val hs = w * pr(kk) * ((if (kk == ll) 1.0 else 0.0) - pr(ll))
-                if (hs != 0.0) {
-                  i = 0
-                  while (i < d) {
-                    val v = hs * x(i)
-                    var j = 0
-                    while (j < d) { h(kk * d + i)(ll * d + j) += v * x(j); j += 1 }
-                    i += 1
-                  }
-                }
-                ll += 1
-              }
-              kk += 1
-            }
-          }
-        }
-        Iterator.single((g, h))
-      }
-      val (grad, hess) = graft.stats.DetReduce.orderedReduce[(Array[Double], Array[Array[Double]])](
-        buffers,
-        { case ((g1, h1), (g2, h2)) =>
-          var i = 0
-          while (i < p) {
-            g1(i) += g2(i)
-            var j = 0
-            while (j < p) { h1(i)(j) += h2(i)(j); j += 1 }
-            i += 1
-          }
-          (g1, h1)
-        },
-        (new Array[Double](p), Array.ofDim[Double](p, p)))
-      // ridge on non-intercept entries (index % d != 0)
-      var i = 0
-      while (i < p) {
-        if (i % d != 0) { grad(i) -= l2 * beta(i); hess(i)(i) += l2 }
-        else hess(i)(i) += 1e-12
-        i += 1
-      }
-      dampedAdd(beta, solve(hess, grad))
-    }
-    data.unpersist()
-    // de-standardize: coef_orig = coef_z / σ ; b0_orig = b0_z − Σ coef_z μ/σ
-    MultiModel(featureCols, classes,
-      Array.tabulate(km)(kk =>
-        Array.tabulate(d - 1)(j => beta(kk * d + 1 + j) / sd(j))),
-      Array.tabulate(km) { kk =>
-        var b0 = beta(kk * d)
-        var j = 0
-        while (j < d - 1) { b0 -= beta(kk * d + 1 + j) * mu(j) / sd(j); j += 1 }
-        b0
-      })
-  }
-
-  /** Fit on `df` with double feature columns and a 0/1 label column. */
-  def fit(df: DataFrame, featureCols: Seq[String], labelCol: String,
-          balanced: Boolean = true, l2: Double = 1e-6, iters: Int = 12): Model = {
-    val d = featureCols.size + 1 // + intercept
-    val data = df.select((labelCol +: featureCols)
-      .map(c => col(s"`${c.replace("`", "``")}`").cast("double")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = data.agg(count(lit(1)),
-      sum(col(s"`${labelCol.replace("`", "``")}`").cast("double"))).collect()(0)
-    val n = counts.getLong(0).toDouble
-    val nPos = counts.getDouble(1)
-    val (w0, w1) =
-      if (!balanced) (1.0, 1.0)
-      else (n / (2.0 * (n - nPos)), n / (2.0 * nPos)) // n/(k*n_c)
-
-    // internal standardization + step damping, same rationale as fitMulti
-    // (see columnStats/dampedAdd); model de-transformed to original units
-    val (mu, sd) = columnStats(data, d)
-
-    var beta = new Array[Double](d) // [intercept, coefs...]
-    for (_ <- 0 until iters) {
-      val b = beta
-      // InternalRow pass (toRdd, not .rdd): the cached frame is read through
-      // InMemoryTableScan without the deserializer boxing every double —
-      // this loop runs `iters` times over the FULL table for the final model
-      val buffers = data.queryExecution.toRdd.mapPartitions { rows =>
-        val g = new Array[Double](d)
-        val h = Array.ofDim[Double](d, d)
-        val x = new Array[Double](d)
-        rows.foreach { r =>
-          var ok = !r.isNullAt(0)
-          val y = if (ok) r.getDouble(0) else 0.0
-          x(0) = 1.0
-          var i = 1
-          while (i < d && ok) {
-            if (r.isNullAt(i)) ok = false
-            else {
-              x(i) = (r.getDouble(i) - mu(i - 1)) / sd(i - 1)
-              if (x(i).isNaN) ok = false
-            }
-            i += 1
-          }
-          if (ok) {
-            var m = 0.0
-            i = 0
-            while (i < d) { m += b(i) * x(i); i += 1 }
-            val p = 1.0 / (1.0 + math.exp(-m))
-            val w = if (y > 0.5) w1 else w0
-            val gscale = w * (y - p)
-            val hscale = w * p * (1.0 - p)
-            i = 0
-            while (i < d) {
-              g(i) += gscale * x(i)
-              var j = 0
-              while (j < d) { h(i)(j) += hscale * x(i) * x(j); j += 1 }
-              i += 1
-            }
-          }
-        }
-        Iterator.single((g, h))
-      }
-      // ordered merge (not treeReduce): deterministic double-sum order
-      val (grad, hess) = graft.stats.DetReduce.orderedReduce[(Array[Double], Array[Array[Double]])](
-        buffers,
-        { case ((g1, h1), (g2, h2)) =>
-          var i = 0
-          while (i < d) {
-            g1(i) += g2(i)
-            var j = 0
-            while (j < d) { h1(i)(j) += h2(i)(j); j += 1 }
-            i += 1
-          }
-          (g1, h1)
-        },
-        (new Array[Double](d), Array.ofDim[Double](d, d)))
-      // ridge on non-intercept terms; solve H delta = grad - l2*beta
-      var i = 1
-      while (i < d) { grad(i) -= l2 * beta(i); hess(i)(i) += l2; i += 1 }
-      hess(0)(0) += 1e-12
-      dampedAdd(beta, solve(hess, grad))
-    }
-    data.unpersist()
-    // de-standardize: coef_orig = coef_z / σ ; b0_orig = b0_z − Σ coef_z μ/σ
-    val coef = Array.tabulate(d - 1)(j => beta(j + 1) / sd(j))
-    var b0 = beta(0)
-    var j = 0
-    while (j < d - 1) { b0 -= beta(j + 1) * mu(j) / sd(j); j += 1 }
-    Model(featureCols, coef, b0)
   }
 
   /** Gaussian elimination with partial pivoting (d is tiny). */

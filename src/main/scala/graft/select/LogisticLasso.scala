@@ -31,13 +31,19 @@ object LogisticLasso {
 
   private def q(c: String) = col(s"`${c.replace("`", "``")}`")
 
-  /** Balanced class weights (sklearn: n / (2 * n_c) for k=2) as (w0, w1). */
-  private[select] def balancedWeights(n: Double, nPos: Double): (Double, Double) =
-    (n / (2.0 * math.max(n - nPos, 1.0)), n / (2.0 * math.max(nPos, 1.0)))
+  /** sklearn "balanced" class weights n / (K · n_c) over the K per-class
+    * row counts; a class without rows counts as one.
+    */
+  private[select] def balancedWeights(counts: Array[Long]): Array[Double] = {
+    val n = counts.sum.toDouble
+    counts.map(c => n / (counts.length * math.max(c, 1L).toDouble))
+  }
 
+  /** Balanced weights (w0, w1) of a 0/1 label: a label above 0.5 is positive. */
   def classWeights(df: DataFrame, labelCol: String): (Double, Double) = {
-    val r = df.agg(count(lit(1)), sum(q(labelCol).cast("double"))).collect()(0)
-    balancedWeights(r.getLong(0).toDouble, r.getDouble(1))
+    val r = df.agg(count(lit(1)), count(when(q(labelCol).cast("double") > 0.5, 1))).collect()(0)
+    val Array(w0, w1) = balancedWeights(Array(r.getLong(0) - r.getLong(1), r.getLong(1)))
+    (w0, w1)
   }
 
   /** Fit on double feature columns and a 0/1 label column. */

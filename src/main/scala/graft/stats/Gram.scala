@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Accumulated second-order statistics of a feature block (+ optional target):
-  * n, Σx, upper-triangular ΣxxT, Σxy, Σy, Σy² — one pass, tree-reduced.
+  * n, Σx, upper-triangular ΣxxT, Σxy, Σy, Σy² — one pass, merged by DetReduce.
   *
   * This is the distributed backbone for the reference's dense linear algebra:
   * correlation matrices (featsel.py:267, autofeatlight.py:41-43,
@@ -190,14 +190,14 @@ object Gram {
 }
 
 /** NaN-aware per-column scaling statistics (reference nb_utils.py:25-37:
-  * nanmean / nanstd with ddof=0). Pure SQL aggregates — one job, no RDD.
+  * nanmean / nanstd with ddof=0), from one DetReduce pass.
   */
 object Scaling {
   final case class Stats(mean: Array[Double], stdPop: Array[Double], stdSamp: Array[Double], count: Array[Long])
 
   def stats(df: DataFrame, cols: Seq[String]): Stats = {
     val k = cols.size
-    // ONE tree-reduced pass for any column count (a chunked-SQL-aggregate
+    // ONE DetReduce pass for any column count (a chunked-SQL-aggregate
     // formulation costs seconds of analysis/codegen per ~100 columns and a
     // full scan per chunk). Naive-moment formulas match numpy nanmean /
     // nanstd — the reference's own semantics (nb_utils.py:25-37).

@@ -7,9 +7,11 @@ import graft.ckpt.Checkpoint
 import graft.time.{PointInTime, TranscriptGen}
 
 /** Production feature-regeneration job (spark-submit entry, north rule):
-  * transcript table -> point-in-time base features -> engineered winner
-  * vectors, written as a resumable hash-bucketed parquet output with
-  * per-partition lineage + row-count/feature-hash manifests.
+  * reads a transcript table, computes the point-in-time base features and
+  * writes one row per turn: the keys (conv_id, turn_idx, ts) plus the 12
+  * numeric base features (PointInTime.numericFeatureCols without turn_idx)
+  * as doubles. The output is a resumable hash-bucketed parquet directory
+  * with per-partition lineage + row-count/feature-hash manifests.
   *
   *   spark-submit --class graft.tools.FeatureJob <jar> \
   *     <input parquet dir | gen:<nConvs>> <outDir> [nBuckets]

@@ -1,11 +1,13 @@
 package graft.select
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multinomial softmax Newton fit ([[Logistic.fitMulti]]): parameter
-  * recovery on synthetic softmax data, balanced-weight behavior, and the
-  * serving-column contract (proba sums to 1, first-max argmax).
+  * recovery on synthetic softmax data, balanced-weight behavior, the
+  * serving-column contract (proba sums to 1, first-max argmax), and the
+  * row rule it shares with the sigmoid [[Logistic.fit]].
   */
 class MultiLogisticSpec extends SparkSpec {
   import spark.implicits._
@@ -100,5 +102,43 @@ class MultiLogisticSpec extends SparkSpec {
       s"${mm.coef(0).mkString(",")} vs ${bm.coef.mkString(",")}")
     assert(math.abs(-mm.coef(0)(1) - bm.coef(1)) < 1e-4)
     assert(math.abs(-mm.intercept(0) - bm.intercept) < 1e-4)
+  }
+
+  private def frame(rows: (Option[Double], Option[Double], Option[Double])*) =
+    rows.toDF("x", "y", "label")
+
+  test("dirty rows leave both fits bit-identical; only dirty rows throw") {
+    val nan = Double.NaN
+    // every way to fail the row rule; the 200 null-feature rows of class 0
+    // must not enter the balanced class weights
+    val dirty = Seq(
+      "bad labels" -> frame((Some(0.3), Some(1.0), Some(nan)), (Some(-1.2), Some(0.4), None)),
+      "missing features" -> frame((Some(nan), Some(0.1), Some(1.0)) +:
+        Seq.fill(200)((None, Some(0.7), Some(0.0))): _*),
+      "an infinite feature" -> frame((Some(0.2), Some(Double.PositiveInfinity), Some(2.0))))
+    val bin = df.withColumn("label", (col("label") === 0.0).cast("double")).cache()
+    val fits: Seq[(String, DataFrame, DataFrame => Seq[Double])] = Seq(
+      ("Logistic.fit", bin, d => {
+        val m = Logistic.fit(d, Seq("x", "y"), "label")
+        m.coef.toSeq :+ m.intercept
+      }),
+      ("Logistic.fitMulti", df, d => {
+        val m = Logistic.fitMulti(d, Seq("x", "y"), "label", Seq(0.0, 1.0, 2.0))
+        m.coef.toSeq.flatten ++ m.intercept
+      }))
+    val bits = (v: Seq[Double]) => v.map(java.lang.Double.doubleToRawLongBits)
+    val moved = for {
+      (name, clean, coefs) <- fits
+      want = coefs(clean)
+      (kind, rows) <- dirty
+      got = coefs(clean.union(rows))
+      if bits(got) != bits(want)
+    } yield s"$name + $kind: $got vs $want"
+    assert(moved.isEmpty, moved.mkString("; "))
+    val allDirty = dirty.map(_._2).reduce(_ union _)
+    for ((name, _, coefs) <- fits) {
+      val e = intercept[IllegalArgumentException](coefs(allDirty))
+      assert(e.getMessage.contains(s"[$name]"), e.getMessage)
+    }
   }
 }
